@@ -557,18 +557,16 @@ object AuditOps extends QueryPack {
       .agg(count(lit(1)).as("n_games"),
         sum(when(col("winner") === col("s1"), 1L).otherwise(0L))
           .as("wins1")))
-    // LAZY barrier: the nSources count below is wt's first action, so
-    // it both pins the blocks and returns the cardinality in one job
-    // (eager materialize ran a pin job plus a count job — the count
-    // was added purely to gate broadcasts, so its job was pure cost)
-    val wt = Barriers.materializeLazy(
+    // no barrier: wt's only action is the collect below, so pinning
+    // its blocks would store data nothing re-reads
+    val wt =
       pr.select(col("s1").as("src"), col("wins1").as("w"),
           col("n_games").as("n"))
         .unionAll(pr.select(col("s2").as("src"),
           (col("n_games") - col("wins1")).as("w"),
           col("n_games").as("n")))
         .groupBy(col("src"))
-        .agg(sum(col("w")).as("w_total"), sum(col("n")).as("n_games")))
+        .agg(sum(col("w")).as("w_total"), sum(col("n")).as("n_games"))
     // |sources| is the model dimension — every MM-iteration frame is
     // that size, and the win matrix pr is at most its square.
     // MODEL PULL (the l32 centroid / l85 pool discipline): the MM

@@ -593,8 +593,9 @@ object Dml extends QueryPack {
     val t = "orders_cu"
     val o = T.load(s, dir, "orders")
     // one staging job for all four quarterly dirs, four O(metadata)
-    // append-commits — byte-equivalent history to four sn.append calls
-    // minus three tiny-write jobs' fixed cost (see Snapshots.stageEntries)
+    // append-commits — the same row sets and manifest semantics as four
+    // sn.append calls, minus three tiny-write jobs' fixed cost (see
+    // Snapshots.stageEntries)
     sn.appendMany(Seq((1, 3), (4, 6), (7, 9), (10, 12)).map { case (a, b) =>
       o.filter(month(col("o_orderdate")).between(a, b)) }, t)
     val q3 = month(col("o_orderdate")).between(7, 9)

@@ -321,7 +321,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
   /** Cache of immutable segment files (they are write-once, so a
     * cached parse can never go stale). Bounded by LIVE metadata only
     * because GC evicts: [[expire]] and [[cleanOrphans]] call
-    * [[evictDeadSegCacheEntries]] after deleting segment files, so a
+    * [[evictDeadCacheEntries]] after deleting segment files, so a
     * long-lived writer's cache tracks the live segment set instead of
     * accumulating every segment ever touched (orphaned re-chunk
     * leftovers, lost-race stages, expired history) — and a post-GC
@@ -340,41 +340,61 @@ class Snapshots(root: String, segThreshold: Int = 64) {
   private val segCountsCache =
     new java.util.concurrent.ConcurrentHashMap[String, Snapshots.SegCounts]()
 
-  /** Drop cache entries whose segment file no longer exists (deleted
-    * by [[expire]]/[[cleanOrphans]], here or in another instance on
-    * the same root). O(cache size) file-existence probes — metadata
-    * stat calls, paid once per GC pass, which bounds the caches at the
-    * live segment count. */
-  private def evictDeadSegCacheEntries(): Unit = {
+  /** Drop cache entries whose segment file, or whose dir's part file,
+    * no longer exists (deleted by [[expire]]/[[cleanOrphans]], here or
+    * in another instance on the same root). O(cache size)
+    * file-existence probes — metadata stat calls, paid once per GC
+    * pass, which bounds the caches at the live segments and dirs. */
+  private def evictDeadCacheEntries(): Unit = {
     segCache.keySet.removeIf(rel =>
       !new java.io.File(s"$root/$rel").exists())
     segCountsCache.keySet.removeIf(rel =>
       !new java.io.File(s"$root/$rel").exists())
+    dirSchemaCache.keySet.removeIf { case (rel, part) =>
+      !new java.io.File(s"$root/$rel/$part").exists()
+    }
   }
 
-  /** Per-DIR schema cache, populated at stage time from the written
-    * frame's own schema (made all-nullable — file scans force nullable
-    * columns). Data dirs are write-once, so a cached schema can never
-    * go stale. Purpose: `spark.read.parquet` pays ~80-120 ms of driver
-    * work per call re-inferring the schema from a footer it has read
-    * before (measured via tools.CommitMicro: bare resolve 128 ms vs
-    * schema-pinned 14 ms); every read the STAGING WRITER of the dirs
-    * later issues (CoW probes, MoR frames, read-backs) can pin the
-    * schema instead. Reads spanning dirs with DIFFERENT cached schemas
-    * (schema-evolution fixtures) or any uncached dir fall back to
-    * plain inference — the pinned path is only taken when it is
-    * provably the same schema inference would return. */
+  /** Per-DIR schema cache, read-through: a dir's schema is resolved
+    * from its first part file's footer on the driver
+    * (`ColumnBridge.parquetFileSchema`, Spark's own footer-to-schema
+    * step) the first time this instance reads the dir, and never
+    * again. Purpose: `spark.read.parquet` otherwise re-infers the
+    * schema on every read, and each inference is a Spark job (~80-120
+    * ms of driver work, measured via tools.CommitMicro: bare resolve
+    * 128 ms vs schema-pinned 14 ms) — a reader that builds the same
+    * merge-on-read frame per query paid it once per dir per query.
+    *
+    * Keyed on dir IDENTITY, not name: (root-relative dir, name of its
+    * first part file). Part-file names carry the writing job's UUID,
+    * so when rollback + GC frees a dir name and [[freshDataRel]]
+    * re-mints it with other content, the new dir has a new key and a
+    * schema cached for the old one can never be served for it. GC
+    * ([[evictDeadCacheEntries]]) drops keys whose part file is
+    * gone, which bounds the cache at the live dirs this instance
+    * read. */
   private val dirSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+    (String, String), org.apache.spark.sql.types.StructType]()
 
   /** `spark.read.parquet` over root-relative dirs, schema-pinned when
-    * every dir was staged by this instance with one identical schema. */
-  private def readDirs(spark: SparkSession, rels: Seq[String]): DataFrame = {
-    val schemas = rels.flatMap(r => Option(dirSchemaCache.get(r))).distinct
-    if (schemas.size == 1 &&
-        rels.forall(r => dirSchemaCache.containsKey(r)))
-      spark.read.schema(schemas.head).parquet(rels.map(r => s"$root/$r"): _*)
-    else spark.read.parquet(rels.map(r => s"$root/$r"): _*)
+    * every dir resolves to one identical schema through
+    * [[dirSchemaCache]]. Reads spanning dirs with DIFFERENT schemas
+    * (schema-evolution fixtures) or a dir holding no parquet file fall
+    * back to plain inference, so the pinned path is only taken when it
+    * is the schema inference would return. Shared by every read of the
+    * store, the streaming tail's included. */
+  private[graft] def readDirs(spark: SparkSession,
+      rels: Seq[String]): DataFrame = {
+    val paths = rels.map(r => s"$root/$r")
+    val parts = rels.map(r => Option(new java.io.File(s"$root/$r").list())
+      .flatMap(_.filter(_.endsWith(".parquet")).minOption).map(r -> _))
+    val schemas =
+      if (parts.exists(_.isEmpty)) Seq.empty
+      else parts.flatten.map(id => dirSchemaCache.computeIfAbsent(id,
+        _ => org.apache.spark.sql.graft.ColumnBridge
+          .parquetFileSchema(spark, s"$root/${id._1}/${id._2}"))).distinct
+    if (schemas.size == 1) spark.read.schema(schemas.head).parquet(paths: _*)
+    else spark.read.parquet(paths: _*)
   }
 
   /** Test visibility: current segment-cache entry count. */
@@ -725,11 +745,6 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     // _temporary staging (caught by the 8-appender race spec under
     // load). Append never removes the claim, so the CAS stays a CAS.
     df.write.mode(SaveMode.Append).parquet(s"$root/$rel")
-    // the dir's schema is the written frame's (nullable-forced, as a
-    // file scan reports it) — remember it so later reads skip footer
-    // schema inference (see dirSchemaCache)
-    dirSchemaCache.put(rel,
-      org.apache.spark.sql.graft.ColumnBridge.asNullable(df.schema))
     val json = DirStats.writeFor(new java.io.File(s"$root/$rel"))
     ManifestEntry(kind, seq, rel, key, json)
   }
@@ -742,17 +757,24 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     * driver's clock; here the union of the slices, tagged with a
     * partition column, writes all N dirs in one job whose tasks run in
     * parallel, and the files MOVE (rename, no byte copy) into the
-    * claimed d<K> dirs. Per-dir content is identical to N separate
-    * [[stageEntry]] calls: each input frame's partitions carry only
-    * its own tag, so file counts, row sets and footer stats match the
-    * serial staging exactly. A frame that writes no rows leaves no
-    * partition dir — it falls back to its own [[stageEntry]] call
+    * claimed d<K> dirs. Each dir holds the same row set as a separate
+    * [[stageEntry]] call would write (each input frame's partitions
+    * carry only its own tag), under the same manifest semantics; the
+    * files themselves may differ — a dynamic-partition write emits no
+    * file for an empty task, and moved dirs carry no `_SUCCESS`
+    * marker — so per-dir file sets and inline stats are not promised
+    * byte-equal to serial staging. A frame that writes no rows leaves
+    * no partition dir — it falls back to its own [[stageEntry]] call
     * (which writes an empty parquet file, as the serial path does).
-    * Entries are returned in input order with the given kind/seq;
-    * commit them individually ([[appendMany]]) or together. */
+    * DATA entries only: an equality-delete entry needs its key
+    * columns, which only [[stageEntry]] takes. Entries are returned in
+    * input order with the given seq; commit them individually
+    * ([[appendMany]]) or together. */
   def stageEntries(dfs: Seq[DataFrame], table: String, kind: String = "data",
       seq: Int = 0): Seq[ManifestEntry] = {
     import org.apache.spark.sql.functions.lit
+    require(kind == "data", "stageEntries stages DATA dirs; a delete " +
+      "entry needs its key columns — stage it through stageEntry")
     if (dfs.isEmpty) return Seq.empty
     if (dfs.size == 1) return Seq(stageEntry(dfs.head, table, kind, seq))
     val rels = dfs.map(_ => freshDataRel(table)) // claim names up front
@@ -770,11 +792,8 @@ class Snapshots(root: String, segThreshold: Int = 64) {
         java.nio.file.Files.move(f.toPath,
           new java.io.File(s"$root/${rels(i)}", f.getName).toPath)
       }
-      if (files.exists(_.getName.endsWith(".parquet")))
-        dirSchemaCache.put(rels(i),
-          org.apache.spark.sql.graft.ColumnBridge.asNullable(
-            dfs(i).schema))
-      else // empty slice: no partition dir was written — stage it the
+      if (!files.exists(_.getName.endsWith(".parquet")))
+        // empty slice: no partition dir was written — stage it the
         // serial way so the dir holds an empty parquet file, exactly
         // as N individual stageEntry calls would have left it
         dfs(i).write.mode(SaveMode.Append).parquet(s"$root/${rels(i)}")
@@ -792,9 +811,9 @@ class Snapshots(root: String, segThreshold: Int = 64) {
   }
 
   /** N sequential append-commits over frames staged in ONE write job
-    * ([[stageEntries]]) — byte-equivalent metadata to N [[append]]
-    * calls (same dir names, same per-commit seq/mint stamps, same
-    * version count), minus N-1 write jobs' fixed cost. */
+    * ([[stageEntries]]) — the same row sets and manifest semantics as
+    * N [[append]] calls (same dir names, same per-commit seq/mint
+    * stamps, same version count), minus N-1 write jobs' fixed cost. */
   def appendMany(dfs: Seq[DataFrame], table: String): Seq[Int] =
     stageEntries(dfs, table).map(e => appendEntries(table, Seq(e)))
 
@@ -891,9 +910,12 @@ class Snapshots(root: String, segThreshold: Int = 64) {
   }
 
   /** D5: read the table as of a pinned version — with any equality-
-    * delete entries APPLIED (the merge-on-read path). Pure-data
-    * snapshots take the zero-overhead fast path: one multi-dir scan,
-    * no joins in the plan.
+    * delete entries APPLIED (the merge-on-read path: one anti-join per
+    * distinct delete key set, [[logicalFrame]]). Pure-data snapshots
+    * take the zero-overhead fast path: one multi-dir scan, no joins in
+    * the plan. Every dir's schema comes from the instance's schema
+    * cache, so building the frame launches no Spark job once the dirs
+    * have been read before.
     *
     * EXPIRY-RACE GUARD: a pinned read must return the FULL version or
     * fail loudly — never a partial row set. The silent-partial window
@@ -923,31 +945,64 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     df
   }
 
-  /** The merge-on-read scan: data entries grouped by seq, each group
-    * anti-joined against every delete entry with a STRICTLY larger seq
-    * (Iceberg's sequence-number rule), groups unioned back. The plan
-    * carries one anti-join per (seq group × applicable delete) — at
-    * scale that is exactly why MoR engines fold deletes periodically
-    * ([[rewriteDeletes]] is that major compaction); the read stays
-    * correct at any delete count, just not free. Delete frames are
-    * O(deleted keys) and AQE broadcasts them when small. */
+  /** The merge-on-read scan: the data entries' seq groups, each read
+    * once and tagged with its seq as a literal column, unioned; then
+    * ONE anti-join per distinct delete key set against that set's
+    * delete dirs ([[deleteSets]], each read once, tagged with its
+    * entry's seq), with the residual `del.seq > data.seq` — Iceberg's
+    * sequence-number rule: a delete applies only to data of a STRICTLY
+    * smaller seq. The plan as built holds one join per key set, not
+    * one per (seq group × delete); Spark's optimizer then pushes each
+    * anti-join into the union's seq groups, where the residual folds
+    * to the deletes the group's seq admits, so a data row is probed
+    * once per key set and groups admitting the same deletes share one
+    * broadcast of them. Each delete still costs its dir's rows on
+    * every read, which is why MoR engines fold deletes
+    * periodically ([[rewriteDeletes]] is that major compaction).
+    * Delete frames are O(deleted keys) and AQE broadcasts them when
+    * small. Deletes no data entry under-ranks add nothing to the plan. */
   private def logicalFrame(spark: SparkSession,
       entries: Seq[ManifestEntry]): DataFrame = {
-    val dels = entries.filter(_.kind == "delete").sortBy(_.seq)
+    import org.apache.spark.sql.functions.lit
     val datas = entries.filter(_.kind == "data")
     require(datas.nonEmpty, "logicalFrame needs at least one data entry")
-    datas.groupBy(_.seq).toSeq.sortBy(_._1).map { case (seq, group) =>
-      val base = readDirs(spark, group.map(_.rel))
-      dels.filter(_.seq > seq).foldLeft(base) { (df, d) =>
-        // NULL-SAFE anti-join (Iceberg equality-delete semantics: null
-        // matches null) — a plain using-column anti would never match a
-        // NULL key value, so rows deleteWhereMoR wrote into the delete
-        // file would silently survive every read
-        val del = readDirs(spark, Seq(d.rel))
-        df.join(del, d.key.map(k => df(k) <=> del(k)).reduce(_ && _),
-          "left_anti")
-      }
+    val minSeq = datas.map(_.seq).min
+    val dels = entries.filter(e => e.kind == "delete" && e.seq > minSeq)
+    if (dels.isEmpty) return readDirs(spark, datas.map(_.rel))
+    val dataSeq = "_graft_data_seq"
+    val tagged = datas.groupBy(_.seq).toSeq.sortBy(_._1).map {
+      case (seq, group) =>
+        readDirs(spark, group.map(_.rel)).withColumn(dataSeq, lit(seq))
     }.reduce(_ unionByName _)
+    deleteSets(spark, dels).foldLeft(tagged) { case (df, (key, del)) =>
+      // NULL-SAFE anti-join (Iceberg equality-delete semantics: null
+      // matches null) — a plain using-column anti would never match a
+      // NULL key value, so rows deleteWhereMoR wrote into the delete
+      // file would silently survive every read
+      df.join(del, key.map(k => df(k) <=> del(k)).reduce(_ && _) &&
+        del(DeleteSeq) > df(dataSeq), "left_anti")
+    }.drop(dataSeq)
+  }
+
+  /** Name of the seq column [[deleteSets]] tags delete rows with. */
+  private val DeleteSeq = "_graft_delete_seq"
+
+  /** The delete entries grouped by key set (in order of first seq):
+    * per set, its key columns and the union of its delete dirs — each
+    * read once, projected to the key columns and tagged with its
+    * entry's seq ([[DeleteSeq]]). The one delete-side shape of both
+    * the merge-on-read scan and [[rewriteDeletes]]'s probe. */
+  private def deleteSets(spark: SparkSession, dels: Seq[ManifestEntry])
+      : Seq[(Seq[String], DataFrame)] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val sorted = dels.sortBy(_.seq)
+    sorted.map(_.key.toSet).distinct.map { keySet =>
+      val set = sorted.filter(_.key.toSet == keySet)
+      val key = set.head.key
+      key -> set.map(d => readDirs(spark, Seq(d.rel))
+        .select(key.map(col): _*).withColumn(DeleteSeq, lit(d.seq)))
+        .reduce(_ unionByName _)
+    }
   }
 
   /** Read the current snapshot. */
@@ -1151,7 +1206,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     *    carries over verbatim — except delete entries no surviving
     *    data entry can feel (no kept entry with a smaller seq), which
     *    drop so a long-running sink self-compacts its delete metadata
-    *    instead of paying an inert anti-join per read forever. */
+    *    instead of carrying inert delete entries forever. */
   private def keyedCow(spark: SparkSession, table: String,
       source: DataFrame, key: String, broadcastKeys: Boolean)
       (build: (Option[DataFrame], DataFrame) => DataFrame): Int =
@@ -1307,14 +1362,14 @@ class Snapshots(root: String, segThreshold: Int = 64) {
         // key rewrites (even if only a later-seq delete names that
         // key) — a superset, never a wrong result, because the
         // rewrite materializes each dir group's exact MoR frame
-        // the probe mirrors logicalFrame's NULL-SAFE delete application:
-        // a dir whose only deleted rows carry a NULL key must still
-        // rewrite, or the delete entry would fold away while its rows
-        // survive
+        // the probe mirrors logicalFrame's NULL-SAFE delete application,
+        // over the same per-key-set delete frames (one semi-join per key
+        // set): a dir whose only deleted rows carry a NULL key must
+        // still rewrite, or the delete entry would fold away while its
+        // rows survive
         val (touchedRels, _) = splitByMark(spark, candidates.map(_.rel),
-          df => dels.map { d =>
-            val del = readDirs(spark, Seq(d.rel))
-            df.join(del, d.key.map(k => df(k) <=> del(k)).reduce(_ && _),
+          df => deleteSets(spark, dels).map { case (key, del) =>
+            df.join(del, key.map(k => df(k) <=> del(k)).reduce(_ && _),
               "left_semi")
           }.reduce(_ unionByName _))
         val touched = candidates.filter(e => touchedRels.contains(e.rel))
@@ -1812,7 +1867,8 @@ class Snapshots(root: String, segThreshold: Int = 64) {
   /** M19: MoR FOLD ADVISOR — the maintenance-surface mirror of M7's
     * threshold analysis, for the read cost that is data-proportional
     * BY DESIGN: every equality-delete entry a snapshot carries adds
-    * one anti-join to [[asOf]]'s merge-on-read plan, and the delete
+    * one delete-dir scan to the anti-join of its key set in [[asOf]]'s
+    * merge-on-read plan (one join per distinct key set), and the delete
     * rows themselves are shuffled on every read until
     * [[rewriteDeletes]] folds them (Iceberg's major compaction — its
     * `rewrite_data_files` advisors read exactly these two signals:
@@ -1820,7 +1876,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     * manifest read, entry counts + inline row stats, no data I/O —
     * the shape a 100k-dir table needs. Recommends FOLD_DELETES when
     * the live snapshot carries more than `maxDeleteEntries` delete
-    * entries (per-read join count) OR its deleted-row mass exceeds
+    * entries (per-read delete-dir scans) OR its deleted-row mass exceeds
     * `maxDeletePermille` of data rows (per-read shuffle mass);
     * otherwise OK. Row totals exclude statless legacy entries (the
     * [[partitionsMetadata]] rule: -1 is a sentinel, never a quantity)
@@ -2120,7 +2176,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
       .filter(f => f.isFile && !liveSegs.contains(f.getCanonicalPath) &&
         f.lastModified() <= cutoff)
       .foreach(_.delete())
-    evictDeadSegCacheEntries()
+    evictDeadCacheEntries()
     doomed
   }
 
@@ -2168,7 +2224,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
             val p = d.getPath; d.delete(); Seq(p)
           } else Seq.empty
         }
-    evictDeadSegCacheEntries()
+    evictDeadCacheEntries()
     deleted
   }
 }

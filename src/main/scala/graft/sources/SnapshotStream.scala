@@ -616,8 +616,7 @@ class SnapshotTailSource(spark: SparkSession, root: String, table: String,
         persistRetiredMaybe(endV)
         if (added.isEmpty) emptyBatch
         else {
-          val scan = spark.read.parquet(
-            added.map(e => s"$root/${e.rel}"): _*)
+          val scan = store.readDirs(spark, added.map(_.rel))
           // post-listing expiry-race re-check, same dichotomy as the
           // batch readers: full batch or loud refusal, never a dir
           // half-gutted by a racing sweep delivered as a short batch

@@ -25,12 +25,27 @@ object ColumnBridge {
     case e => e
   }
 
-  /** Nullable-forced view of a schema (`DataType.asNullable` is
-    * `private[spark]`): what a file-based scan of data written with
-    * this schema reports — file sources force every column nullable.
-    * Used to pin a staged dir's read schema without footer inference. */
-  def asNullable(st: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType = st.asNullable
+  /** The schema `spark.read.parquet` would infer from one parquet file:
+    * Spark's own footer-to-schema step (`readSchemaFromFooter`, the
+    * serialized Spark schema when the writer left one, else the
+    * session's physical-type conversion), run on the driver over a
+    * footer read here — where inference through `spark.read` launches
+    * a Spark job per read to open the same footer. */
+  def parquetFileSchema(spark: org.apache.spark.sql.SparkSession,
+      file: String): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState
+    val path = new org.apache.hadoop.fs.Path(file)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path,
+        state.newHadoopConf()))
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(path, footer),
+      new ParquetToSparkSchemaConverter(state.conf))
+  }
 
   /** Build a DataFrame over a custom LogicalPlan (`Dataset.ofRows` is
     * `private[sql]`) — the constructor for whole-operator extensions

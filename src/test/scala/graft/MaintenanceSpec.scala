@@ -1958,4 +1958,213 @@ class MaintenanceSpec extends SparkSpec {
       sn.appendEntries("td", Seq(delE))
     }
   }
+
+  /** Spark jobs started on this thread while `body` runs, counted by a
+    * SparkListener. Events reach listeners asynchronously, so a
+    * sentinel job of its own group runs after `body`: once the
+    * listener has seen it start, it has seen every earlier job. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${System.nanoTime()}"
+    val sentinel = s"$group-sentinel"
+    val seen = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => seen.incrementAndGet()
+          case Some(`sentinel`) => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobs under test")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "listener drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener never saw the sentinel job")
+      seen.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A merge-on-read table mixing two delete key sets, null keys and
+    * re-inserted keys over three data seq groups (seq 1, 3, 6):
+    * v1 append, v2 delete on (k), v3 append re-inserting a deleted key,
+    * v4 delete on (k, s) with null keys, v5 delete on (k), v6 append
+    * re-inserting keys both sets deleted, v7 delete on (k, s). */
+  private def mixedMoRTable(sn: Snapshots, t: String): Unit = {
+    import spark.implicits._
+    def rows(rs: (Option[Long], Option[String], Double)*) =
+      rs.toDF("k", "s", "v").coalesce(1)
+    sn.append(rows((Some(1L), Some("a"), 1.0), (Some(2L), Some("b"), 2.0),
+      (Some(3L), None, 3.0), (None, Some("n"), 4.0), (None, None, 5.0),
+      (Some(4L), Some("d"), 6.0)), t)
+    sn.deleteWhereMoR(spark, t, col("k") === 1L, Seq("k"))
+    sn.append(rows((Some(1L), Some("a2"), 7.0), (Some(5L), Some("e"), 8.0),
+      (None, Some("n"), 9.0)), t)
+    sn.deleteWhereMoR(spark, t,
+      col("k").isNull && col("s") === "n" || col("k") === 3L, Seq("k", "s"))
+    sn.deleteWhereMoR(spark, t, col("k").isin(2L, 5L), Seq("k"))
+    sn.append(rows((Some(2L), Some("b2"), 10.0), (None, Some("n"), 11.0),
+      (Some(3L), None, 12.0)), t)
+    sn.deleteWhereMoR(spark, t, col("v") === 6.0 || col("v") === 12.0,
+      Seq("k", "s"))
+  }
+
+  test("merge-on-read plans ONE anti-join per delete key set, reading " +
+      "each data seq group and each delete dir once") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    def joins(p: LogicalPlan) = p.collect { case j: Join => j }.size
+    def scans(p: LogicalPlan) = p.collect { case r: LogicalRelation => r }.size
+    val root = scratch()
+    val sn = new Snapshots(root)
+    mixedMoRTable(sn, "mplan")
+    val es = sn.readEntries("mplan", sn.currentVersion("mplan").get)
+    val dels = es.filter(_.kind == "delete")
+    val groups = es.filter(_.kind == "data").map(_.seq).distinct.size
+    assert(groups == 3 && dels.size == 4 &&
+      dels.map(_.key.toSet).distinct.size == 2, s"fixture drift: $es")
+    val qe = sn.current(spark, "mplan").queryExecution
+    // the plan as built: one null-safe anti-join per key set, with the
+    // seq rule as its residual, over one scan per group and per delete
+    assert(joins(qe.analyzed) == 2, s"one join per key set:\n${qe.analyzed}")
+    assert(scans(qe.analyzed) == groups + dels.size, qe.analyzed.toString)
+    // Spark pushes each anti-join into the union's seq groups, where the
+    // residual folds to the group's applicable deletes: never more than
+    // one join per (group × key set), where the per-(group × delete)
+    // plan had one per applicable delete (8 here)
+    val perPair = es.filter(_.kind == "data").map(_.seq).distinct
+      .map(g => dels.count(_.seq > g)).sum
+    assert(perPair == 8 && joins(qe.optimizedPlan) <= groups * 2,
+      s"a join per delete came back:\n${qe.optimizedPlan}")
+    // when every delete is newer than every data group — an appended
+    // table with unfolded deletes — the pushed-down joins share one
+    // delete frame, so the executed plan scans each delete dir ONCE
+    val t = "mplan2"
+    sn.append(Seq((1L, "a"), (2L, "b")).toDF("k", "s").coalesce(1), t)
+    sn.append(Seq((3L, "c"), (4L, "d")).toDF("k", "s").coalesce(1), t)
+    sn.deleteWhereMoR(spark, t, col("k") === 1L, Seq("k"))
+    sn.deleteWhereMoR(spark, t, col("k") === 3L, Seq("k"))
+    val delRels = sn.readEntries(t, sn.currentVersion(t).get)
+      .filter(_.kind == "delete").map(_.rel)
+    val df = sn.current(spark, t)
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 4L))
+    val executed = new AdaptiveSparkPlanHelper {}.collect(
+      df.queryExecution.executedPlan) { case f: FileSourceScanExec => f }
+    delRels.foreach { rel =>
+      val n = executed.count(_.relation.location.rootPaths
+        .exists(_.toString.endsWith(rel)))
+      assert(n == 1, s"delete dir $rel scanned $n times:\n" +
+        df.queryExecution.executedPlan)
+    }
+  }
+
+  test("merge-on-read per key set returns exactly the per-(seq group × " +
+      "delete) semantics: re-inserted keys, null keys, two key sets, " +
+      "every version, and the fold") {
+    val root = scratch()
+    val sn = new Snapshots(root)
+    val t = "msem"
+    mixedMoRTable(sn, t)
+    // the reference: each data seq group anti-joined against every
+    // delete entry of a strictly larger seq, one null-safe join each
+    def perPair(v: Int) = {
+      val es = sn.readEntries(t, v)
+      val dels = es.filter(_.kind == "delete")
+      es.filter(_.kind == "data").groupBy(_.seq).toSeq.map { case (seq, g) =>
+        val base = spark.read.parquet(g.map(e => s"$root/${e.rel}"): _*)
+        dels.filter(_.seq > seq).foldLeft(base) { (df, d) =>
+          val del = spark.read.parquet(s"$root/${d.rel}")
+          df.join(del, d.key.map(k => df(k) <=> del(k)).reduce(_ && _),
+            "left_anti")
+        }
+      }.reduce(_ unionByName _)
+    }
+    def bag(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "s", "v").collect().map(_.toString).sorted.toSeq
+    val vs = sn.versions(t)
+    vs.foreach(v => assert(bag(sn.asOf(spark, t, v)) == bag(perPair(v)),
+      s"v=$v differs from the per-pair semantics"))
+    val expected = bag(perPair(vs.last))
+    // spot checks of the fixture itself: the re-inserted (1, a2) and
+    // (2, b2) survive the deletes older than them, (3, null) re-inserted
+    // at v6 dies under the v7 (k, s) delete, and the null-key (null, n)
+    // rows die except the one re-inserted after the v4 delete
+    assert(expected.contains("[1,a2,7.0]") && expected.contains("[2,b2,10.0]"))
+    assert(!expected.exists(_.startsWith("[3,")))
+    assert(expected.count(_.startsWith("[null,n,")) == 1 &&
+      expected.contains("[null,n,11.0]"))
+    assert(bag(sn.scanWhere(spark, t, col("v") > 0)) == expected)
+    // the fold's probe and rewrite see the same deletes
+    sn.rewriteDeletes(spark, t)
+    assert(sn.readEntries(t, sn.currentVersion(t).get)
+      .forall(_.kind == "data"))
+    assert(bag(sn.current(spark, t)) == expected)
+  }
+
+  test("a second store instance builds a merge-on-read frame without a " +
+      "Spark job once it has read the table's dirs") {
+    val root = scratch()
+    mixedMoRTable(new Snapshots(root), "mjobs")
+    val reader = new Snapshots(root)
+    reader.current(spark, "mjobs").collect() // first read
+    val jobs = jobsDuring {
+      (1 to 3).foreach { _ =>
+        reader.current(spark, "mjobs")
+        reader.scanWhere(spark, "mjobs", col("v") > 2.0)
+      }
+    }
+    assert(jobs == 0,
+      s"building the frame launched $jobs Spark jobs (footer inference)")
+  }
+
+  test("the dir schema cache keys on dir identity: a dir name rollback + " +
+      "GC frees and a new commit re-mints with a new schema reads its " +
+      "new columns in the writer that staged the old dir and in a reader") {
+    import spark.implicits._
+    val root = scratch()
+    val writer = new Snapshots(root)
+    val reader = new Snapshots(root)
+    val t = "remint"
+    writer.commit(Seq((1L, "a")).toDF("k", "s").coalesce(1), t) // v1: d1
+    writer.commit(Seq((2L, "b")).toDF("k", "s").coalesce(1), t) // v2: d2
+    Seq(writer, reader).foreach(sn =>
+      assert(sn.current(spark, t).columns.toSeq == Seq("k", "s")))
+    // another instance rolls back, expires (freeing d2) and commits a
+    // frame of another schema, which re-mints the name d2
+    val maint = new Snapshots(root)
+    maint.rollback(spark, t, 1)
+    maint.expire(t, keep = 1, gcOlderThanMillis = 0L)
+    assert(!new java.io.File(s"$root/$t/data/d2").exists(), "d2 not GC'd")
+    maint.commit(Seq((3L, "c", 9.5)).toDF("k", "s", "x").coalesce(1), t)
+    assert(maint.readManifest(t, maint.currentVersion(t).get) ==
+      Seq(s"$t/data/d2"), "fixture drift: the commit must re-mint d2")
+    Seq(writer, reader).foreach { sn =>
+      val df = sn.current(spark, t)
+      assert(df.columns.toSeq == Seq("k", "s", "x"),
+        s"stale schema served for the re-minted dir: ${df.columns.toSeq}")
+      assert(df.as[(Long, String, Double)].collect().toSeq ==
+        Seq((3L, "c", 9.5)))
+    }
+  }
+
+  test("stageEntries refuses delete entries before staging anything: " +
+      "it takes no key columns to give them") {
+    import spark.implicits._
+    val root = scratch()
+    val sn = new Snapshots(root)
+    intercept[IllegalArgumentException] {
+      sn.stageEntries(Seq(Seq(1L).toDF("k"), Seq(2L).toDF("k")), "se",
+        kind = "delete")
+    }
+    assert(!new java.io.File(s"$root/se").exists(),
+      "a refused delete staging must not leave dirs behind")
+  }
 }

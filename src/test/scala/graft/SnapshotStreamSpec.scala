@@ -30,6 +30,22 @@ class SnapshotStreamSpec extends SparkSpec {
   private def kv(rows: Seq[(Long, Double)]) =
     rows.toDF("k", "v").coalesce(1)
 
+  test("the provider registers its short name: readStream.format(" +
+      "\"graft-snapshots\") resolves and tails the table") {
+    val root = scratch()
+    val sn = new Snapshots(root)
+    val t = "short"
+    sn.commit(kv(Seq((1L, 1.0), (2L, 2.0))), t)
+    val df = spark.readStream.format("graft-snapshots")
+      .option("root", root).option("table", t).load()
+    assert(df.isStreaming && df.columns.toSeq == Seq("k", "v"))
+    val q = df.writeStream.format("memory").queryName("graft_short_name")
+      .outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+    assert(spark.table("graft_short_name").as[(Long, Double)].collect()
+      .toSet == Set((1L, 1.0), (2L, 2.0)))
+  }
+
   test("kill/resume: a second incarnation from the checkpoint neither " +
       "drops nor duplicates, and the offset log reads as table versions") {
     val root = scratch()
