@@ -704,7 +704,7 @@ object Dml extends QueryPack {
   }
 
   /** D-ext: manifest-stats pruned scan — Iceberg's scan-planning file
-    * skip: the snapshot's data dirs carry footer-stat sidecars
+    * skip: each data dir's manifest line carries its footer stats
     * (min/max/nulls per column, harvested at stage time), and
     * `scanWhere` drops every dir whose stats PROVE the predicate can't
     * match before Spark lists or opens it. The table splits on

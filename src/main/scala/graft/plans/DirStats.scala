@@ -15,11 +15,11 @@ import org.apache.spark.sql.catalyst.expressions._
   *
   * Stats are harvested from the parquet FOOTERS the write already
   * produced — a driver-side metadata read per file, no Spark job, no
-  * extra data pass — and stored as `_graft_stats.json` INSIDE the data
-  * dir (underscore-prefixed ⇒ invisible to Spark's parquet reader;
-  * lives and dies with the dir, so GC and orphan cleanup need no new
-  * rules). Collection is best-effort: a dir with no sidecar simply
-  * never prunes (the evaluator's conservative default).
+  * extra data pass — and ride ONLY in the dir's manifest line
+  * ([[ManifestEntry.statsJson]], rendered by [[toJson]]); nothing else
+  * holds a copy. Collection is best-effort: an entry whose harvest
+  * failed carries no stats and simply never prunes (the evaluator's
+  * conservative default).
   *
   * Only top-level primitive columns with footer stats are recorded
   * (INT32/INT64/FLOAT/DOUBLE/BOOLEAN, and BINARY with a UTF8
@@ -28,10 +28,8 @@ import org.apache.spark.sql.catalyst.expressions._
   * absent, which the evaluator treats as unknowable. */
 object DirStats {
 
-  val FileName = "_graft_stats.json"
-
-  /** Sidecar format version. Bumped when value normalization changes —
-    * [[read]] rejects other versions so a stale sidecar degrades to
+  /** Stats format version. Bumped when value normalization changes —
+    * [[parseJson]] rejects other versions so stale stats degrade to
     * the conservative no-prune path instead of being trusted with
     * yesterday's units. */
   val FormatVersion = 2
@@ -52,10 +50,9 @@ object DirStats {
     * count and total bytes), harvested from the same listing the
     * footer pass walks — they make compaction PLANNING a metadata
     * decision (Iceberg manifests carry `file_size_in_bytes` per entry
-    * for the same reason). -1 = unknown (a pre-r12 sidecar/manifest):
-    * consumers fall back to a directory listing. */
+    * for the same reason). */
   final case class Stats(rows: Long, cols: Map[String, ColStats],
-      files: Long = -1L, bytes: Long = -1L)
+      files: Long, bytes: Long)
 
   // ---- collection from footers ---------------------------------------
 
@@ -202,7 +199,7 @@ object DirStats {
               // Days in one file and Micros in another) must kill the
               // column, not keep the prior bound: keeping it would
               // under-cover the true range and mayMatch could prune a
-              // dir that holds matching rows. Unreachable via stageData
+              // dir that holds matching rows. Unreachable via stageEntry
               // (uniform schema per dir) but collect() accepts any dir.
               if (lo.isEmpty || hi.isEmpty) { dead += name; acc.remove(name) }
               else acc(name) = ColStats(
@@ -217,9 +214,8 @@ object DirStats {
     Stats(rows, acc.toMap, files.length.toLong, files.map(_.length()).sum)
   }.toOption
 
-  /** One-line JSON rendering of a [[Stats]] — the sidecar body, and
-    * (since the manifest carries per-entry metrics) the inline stats
-    * field of a manifest line. Strings go through [[graft.core.Jsonish]]
+  /** One-line JSON rendering of a [[Stats]] — the inline stats field
+    * of a manifest line. Strings go through [[graft.core.Jsonish]]
     * so the output contains no literal tab/newline — a hard requirement
     * for embedding in the tab-separated, line-per-entry manifest. */
   def toJson(st: Stats): String = {
@@ -246,21 +242,20 @@ object DirStats {
         s""""t":${jstr(tag(c.min))},"min":${jval(c.min)},""" +
         s""""max":${jval(c.max)},"nulls":${c.nulls}}"""
     }.mkString("{", ",", "}")
-    val phys = // additive, not a version bump: absent = unknown (-1)
-      if (st.files >= 0 && st.bytes >= 0)
-        s""","files":${st.files},"bytes":${st.bytes}"""
-      else ""
-    s"""{"v":$FormatVersion,"rows":${st.rows}$phys,"cols":$cols}"""
+    s"""{"v":$FormatVersion,"rows":${st.rows},"files":${st.files},""" +
+      s""""bytes":${st.bytes},"cols":$cols}"""
   }
 
-  /** Parse a [[toJson]] rendering. None on malformed input OR a format
-    * version mismatch: stats written under different normalization
-    * rules (e.g. pre-v2 raw timestamp longs) must fall back to the
-    * conservative no-stats path, not be trusted with stale units. */
+  /** Parse a [[toJson]] rendering. None on malformed input, a format
+    * version mismatch, or a body missing `files`/`bytes`: stats written
+    * under other rules (e.g. pre-v2 raw timestamp longs) must fall back
+    * to the conservative no-stats path, not be trusted with stale units
+    * or a fabricated footprint. */
   def parseJson(json: String): Option[Stats] = scala.util.Try {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = om.readTree(json)
-    if (root.get("v") == null || root.get("v").asInt() != FormatVersion)
+    if (root.get("v") == null || root.get("v").asInt() != FormatVersion ||
+        root.get("files") == null || root.get("bytes") == null)
       None
     else {
       val cols = scala.collection.mutable.LinkedHashMap.empty[String, ColStats]
@@ -279,30 +274,9 @@ object DirStats {
         }
         cols(e.getKey) = ColStats(v("min"), v("max"), c.get("nulls").asLong())
       }
-      def opt(k: String): Long =
-        Option(root.get(k)).map(_.asLong()).getOrElse(-1L)
       Some(Stats(root.get("rows").asLong(), cols.toMap,
-        opt("files"), opt("bytes")))
+        root.get("files").asLong(), root.get("bytes").asLong()))
     }
-  }.toOption.flatten
-
-  /** Collect from footers and persist the sidecar; best-effort. Returns
-    * the JSON written, so commit paths can inline the same metrics into
-    * the manifest entry without a second footer pass. */
-  def writeFor(dir: java.io.File): Option[String] =
-    collect(dir).flatMap { st =>
-      scala.util.Try {
-        val json = toJson(st)
-        java.nio.file.Files.writeString(
-          new java.io.File(dir, FileName).toPath, json)
-        json
-      }.toOption
-    }
-
-  def read(dir: java.io.File): Option[Stats] = scala.util.Try {
-    val f = new java.io.File(dir, FileName)
-    if (!f.exists()) None
-    else parseJson(java.nio.file.Files.readString(f.toPath))
   }.toOption.flatten
 
   // ---- inclusive metrics evaluation ----------------------------------

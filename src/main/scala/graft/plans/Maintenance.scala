@@ -164,10 +164,9 @@ object Maintenance {
         s"$table has unfolded equality deletes - run rewriteDeletes first")
       val rels = entries.map(_.rel)
       // physical footprint per dir, memoized — the classification below
-      // reads each dir's stats several times. Manifest metadata first
-      // (file count + bytes ride in each entry's inline stats, so
-      // sizing 100k dirs is one manifest read); a directory listing
-      // only for legacy entries that predate the inline fields.
+      // reads each dir's stats several times. File count + bytes ride in
+      // each entry's inline stats, so sizing 100k dirs is one manifest
+      // read; a directory listing only for a statless entry.
       val st = entries.map(e => e.rel -> physOf(snaps, e)).toMap
       def needed(s: FileStats) = math.max(1L,
         math.ceil(s.totalBytes.toDouble / targetBytes).toLong)
@@ -182,9 +181,8 @@ object Maintenance {
         val compacted = snaps.stageEntry(
           spark.read.parquet(frag.toSeq.map(r => s"${snaps.rootDir}/$r"): _*)
             .repartition(nOut), table, "data", 0)
-        // untouched entries carry over VERBATIM — their inline manifest
-        // stats survive the compaction commit instead of degrading to
-        // sidecar reads
+        // untouched entries carry over VERBATIM, inline stats included:
+        // the manifest line is the only place a dir's stats live
         val tight = entries.filterNot(e => frag.contains(e.rel))
         snaps.commitEntriesIfCurrent(table, cur, tight :+ compacted)
       }
@@ -197,12 +195,10 @@ object Maintenance {
   }
 
   /** A manifest entry's physical footprint: the file count + byte total
-    * inlined in its manifest stats when present (one metadata read for
-    * the whole table), a directory listing only for legacy entries. */
+    * inlined in its manifest stats (one metadata read for the whole
+    * table), a directory listing only for a statless entry. */
   private def physOf(snaps: Snapshots, e: ManifestEntry): FileStats =
-    snaps.entryStats(e)
-      .filter(s => s.files >= 0 && s.bytes >= 0)
-      .map(s => FileStats(s.files, s.bytes))
+    e.stats.map(s => FileStats(s.files, s.bytes))
       .getOrElse(fileStats(s"${snaps.rootDir}/${e.rel}"))
 
   /** M9: full maintenance orchestration over a snapshot-managed table:

@@ -19,20 +19,18 @@ final class ConcurrentCommitException(val table: String,
   * logically deleted). `seq` is the entry's data sequence number —
   * Iceberg's ordering rule re-expressed: a delete applies only to data
   * entries with a STRICTLY SMALLER seq, so a row re-inserted after the
-  * delete (higher seq) survives it. Legacy bare-path manifest lines
-  * parse as (data, seq 0), which keeps every pre-MoR table readable
-  * and keeps their semantics unchanged (no deletes → seq never
-  * consulted). `key` names the equality columns (delete entries only).
+  * delete (higher seq) survives it. `key` names the equality columns
+  * (delete entries only).
   *
   * `statsJson` inlines the dir's metrics — record count plus per-column
   * min/max/null bounds ([[DirStats.toJson]]) — into the manifest line
   * itself, the way Iceberg manifests carry `record_count` and column
   * bounds per file: scan planning, CoW pruning, and per-version row
-  * accounting then read ONE manifest instead of one stats sidecar per
-  * dir (at 100k dirs that is one metadata read vs 100k serial driver
-  * file opens). Kept as the RAW JSON STRING so a parse→format round
-  * trip is byte-stable (entries migrate across manifests verbatim);
-  * legacy entries carry None and fall back to the sidecar. */
+  * accounting read ONE manifest, and nothing else holds a copy of the
+  * stats. Kept as the RAW JSON STRING so a parse→format round trip is
+  * byte-stable (entries migrate across manifests verbatim). An entry
+  * whose footer harvest failed carries None: it never prunes and its
+  * rows count as unknown. */
 final case class ManifestEntry(kind: String, seq: Int, rel: String,
     key: Seq[String], statsJson: Option[String] = None) {
   require(kind == "data" || kind == "delete",
@@ -44,7 +42,7 @@ final case class ManifestEntry(kind: String, seq: Int, rel: String,
   require(statsJson.forall(j => !j.exists(c => c == '\t' || c == '\n' ||
     c == '\r')), "inline stats JSON must not contain tab/newline")
 
-  /** Parsed inline metrics; None for legacy entries. */
+  /** Parsed inline metrics; None when the entry carries none. */
   lazy val stats: Option[DirStats.Stats] = statsJson.flatMap(DirStats.parseJson)
 
   /** The dir's record count from inline metrics, -1 when unknown. */
@@ -68,7 +66,6 @@ object Snapshots {
     * file serializes entries in exactly this (already proven
     * tab/newline-free) format. */
   private[graft] def renderEntryLine(e: ManifestEntry): String = e match {
-    case ManifestEntry("data", 0, rel, _, None) => rel
     case ManifestEntry("data", seq, rel, _, None) => s"data\t$seq\t$rel"
     case ManifestEntry("data", seq, rel, _, Some(j)) =>
       s"data\t$seq\t$rel\t\t$j" // empty 4th field = no key columns
@@ -84,7 +81,6 @@ object Snapshots {
     * executors over `spark.read.textFile` of the segment files. */
   private[graft] def parseEntryLine(line: String): ManifestEntry =
     line.split('\t') match {
-      case Array(rel) => ManifestEntry("data", 0, rel, Nil)
       case Array("data", seq, rel) => ManifestEntry("data", seq.toInt, rel, Nil)
       case Array("data", seq, rel, "", j) =>
         ManifestEntry("data", seq.toInt, rel, Nil, Some(j))
@@ -95,29 +91,18 @@ object Snapshots {
       case _ => sys.error(s"unparseable manifest line: $line")
     }
 
-  /** One `\$files` row from an entry and its RESOLVED stats. Static so
-    * the distributed path's closure captures only strings/maps, never
-    * the Snapshots instance (and with it its caches). */
-  private[plans] def fileRowFrom(e: ManifestEntry,
-      st: Option[DirStats.Stats])
-      : (String, Long, String, Long, Long, Long, Long) =
+  /** One `\$files` row from an entry and its inline stats. Static so
+    * the distributed path's closure captures no Snapshots instance
+    * (and with it its caches). */
+  private[plans] def fileRowFrom(e: ManifestEntry)
+      : (String, Long, String, Long, Long, Long, Long) = {
+    val st = e.stats
     (e.kind, e.seq.toLong, e.rel,
       st.map(_.rows).getOrElse(-1L),
       st.map(_.cols.size.toLong).getOrElse(-1L),
       st.map(_.files).getOrElse(-1L),
       st.map(_.bytes).getOrElse(-1L))
-
-  /** [[fileRowFrom]] with the DRIVER-side stats resolution: inline
-    * manifest metrics first, the per-dir sidecar as legacy fallback.
-    * Inline-manifest (driver) path only — the distributed segmented
-    * path must NOT run the sidecar `java.io.File` read on executors
-    * (they may not share the driver's filesystem) and instead patches
-    * statless entries from a driver-resolved map
-    * ([[Snapshots!.filesMetadata]]). */
-  private[plans] def fileRow(root: String, e: ManifestEntry)
-      : (String, Long, String, Long, Long, Long, Long) =
-    fileRowFrom(e,
-      e.stats.orElse(DirStats.read(new java.io.File(s"$root/${e.rel}"))))
+  }
 
   /** Stats-attributed partition value of a temporal/numeric/string
     * min-max pair — day ordinals and epoch micros render as their
@@ -128,16 +113,14 @@ object Snapshots {
     case other => other.toString
   }
 
-  /** One `\$partitions` pre-rollup row from an entry and its RESOLVED
+  /** One `\$partitions` pre-rollup row from an entry and its inline
     * stats: (isData, rel, attributed partition value or null, rows,
     * files, bytes). Static for the same executor-closure reason as
-    * [[fileRowFrom]] — and like it, takes the stats pre-resolved so
-    * the distributed path never touches the driver's filesystem from
-    * an executor. `rel` rides along so the exact-rollup fallback can
-    * scan just the unattributable dirs. */
-  private[plans] def partRowFrom(partCol: String, e: ManifestEntry,
-      st: Option[DirStats.Stats])
+    * [[fileRowFrom]]. `rel` rides along so the exact-rollup fallback
+    * can scan just the unattributable dirs. */
+  private[plans] def partRowFrom(partCol: String, e: ManifestEntry)
       : (Boolean, String, String, Long, Long, Long) = {
+    val st = e.stats
     val value = st.flatMap(_.cols.get(partCol)) match {
       case Some(c) if c.min == c.max && c.nulls == 0 =>
         renderPartValue(c.min)
@@ -148,13 +131,6 @@ object Snapshots {
       st.map(_.files).getOrElse(-1L),
       st.map(_.bytes).getOrElse(-1L))
   }
-
-  /** [[partRowFrom]] with driver-side stats resolution (inline path
-    * only — see [[fileRow]]'s shared-filesystem caveat). */
-  private[plans] def partRow(root: String, partCol: String,
-      e: ManifestEntry): (Boolean, String, String, Long, Long, Long) =
-    partRowFrom(partCol, e,
-      e.stats.orElse(DirStats.read(new java.io.File(s"$root/${e.rel}"))))
 
   /** Entry counts of one manifest segment: the quadruple [[history]]
     * and [[segmentsMetadata]] need per version-file ref — cached per
@@ -172,13 +148,6 @@ object Snapshots {
     }
     SegCounts(n, d, del, mx)
   }
-
-  /** Resolve the stats of a LEGACY statless entry from its sidecar —
-    * returned as the raw JSON so the patch map ships to executors as
-    * plain strings. Driver-side only. */
-  private[plans] def sidecarJson(root: String, rel: String)
-      : Option[String] =
-    DirStats.read(new java.io.File(s"$root/$rel")).map(DirStats.toJson)
 
   /** Bound a version file's ref-group list (reused `@seg` refs or
     * fresh entry runs, in order) to at most `maxRefs`.
@@ -248,9 +217,9 @@ object Snapshots {
   * }}}
   * A VERSION IS A MANIFEST — a tiny text file of [[ManifestEntry]]
   * lines: data dirs plus Iceberg-v2-style equality-DELETE dirs, each
-  * carrying a data sequence number (bare legacy lines parse as seq-0
-  * data). Consequences, each O(metadata) where the pre-r11 store paid
-  * O(table):
+  * carrying a data sequence number and the dir's inline stats — the
+  * only place the store keeps them. Consequences, each O(metadata)
+  * where the pre-r11 store paid O(table):
   *   - [[append]] writes ONLY the delta files and a manifest that is
   *     `prev lines + 1` — and above `segThreshold` entries the
   *     manifest itself goes two-level (Iceberg's manifest-list /
@@ -268,7 +237,7 @@ object Snapshots {
   *     data rewrites; reads apply it under the sequence-number rule
   *     until [[rewriteDeletes]] folds it away;
   *   - [[scanWhere]] prunes provably-unmatchable dirs at planning
-  *     time from the same footer-stat sidecars;
+  *     time from the same inline footer stats;
   *   - [[expire]] deletes manifest files, then garbage-collects data
   *     dirs no live manifest references — shared files survive as long
   *     as ANY branch still points at them; [[history]] is the
@@ -527,9 +496,6 @@ class Snapshots(root: String, segThreshold: Int = 64) {
   def currentVersion(table: String): Option[Int] = versions(table).lastOption
 
   // ---- manifest entry (de)serialization --------------------------------
-  // A pure-data seq-0 entry serializes as the bare rel path — byte-
-  // identical to the pre-MoR format, so old manifests stay readable and
-  // pure-data tables keep writing the format every existing tool expects.
 
   private def fmtEntry(e: ManifestEntry): String =
     Snapshots.renderEntryLine(e)
@@ -611,21 +577,17 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     } finally tmp.delete()
   }
 
-  /** Commit a manifest referencing EXISTING data dirs (root-relative) —
-    * the metadata-only primitive under publish/rollback/compaction.
+  /** Commit a manifest of EXISTING entries (data + delete, dirs
+    * root-relative) — the metadata-only commit primitive.
     *
-    * PREV-INDEPENDENT intent only: "make exactly these dirs the next
+    * PREV-INDEPENDENT intent only: "make exactly these entries the next
     * snapshot", so losing a version race is resolved by re-claiming
     * the next number with the SAME list (overwrite/rollback/branch
-    * semantics don't read the predecessor). A commit whose file list
+    * semantics don't read the predecessor). A commit whose entry list
     * was DERIVED from the current snapshot (append, CoW delete,
-    * compaction) must instead go through [[commitFilesIfCurrent]] +
+    * compaction) must instead go through [[commitEntriesIfCurrent]] +
     * [[occRetry]], or a concurrent commit's rows would be silently
     * dropped by the stale list. */
-  def commitFiles(table: String, relDirs: Seq[String]): Int =
-    commitEntries(table, relDirs.map(ManifestEntry("data", 0, _, Nil)))
-
-  /** [[commitFiles]] over full entries (data + delete). */
   def commitEntries(table: String, entries: Seq[ManifestEntry]): Int = {
     val (content, fresh) = renderManifest(table, None, entries)
     validateDirs(table, fresh)
@@ -659,16 +621,11 @@ class Snapshots(root: String, segThreshold: Int = 64) {
 
   /** Optimistic commit: claim `expected+1` only if the table is STILL
     * at `expected` — the validation step of the Iceberg commit
-    * protocol. Throws [[ConcurrentCommitException]] when the snapshot
-    * moved (or the claim loses the final CAS), so callers whose file
-    * list was derived from snapshot `expected` re-derive it instead of
+    * protocol, for SNAPSHOT-DERIVED entry lists (data + delete). Throws
+    * [[ConcurrentCommitException]] when the snapshot moved (or the
+    * claim loses the final CAS), so callers whose entry list was
+    * derived from snapshot `expected` re-derive it instead of
     * publishing a stale view. */
-  def commitFilesIfCurrent(table: String, expected: Option[Int],
-      relDirs: Seq[String]): Int =
-    commitEntriesIfCurrent(table, expected,
-      relDirs.map(ManifestEntry("data", 0, _, Nil)))
-
-  /** [[commitFilesIfCurrent]] over full entries (data + delete). */
   def commitEntriesIfCurrent(table: String, expected: Option[Int],
       entries: Seq[ManifestEntry]): Int = {
     // derive the segment layout from `expected` — the snapshot this
@@ -721,20 +678,13 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     s"$table/data/d$k"
   }
 
-  /** Write `df` as a new immutable data dir (NOT yet referenced by any
-    * manifest); returns its root-relative path. Crash before the
-    * subsequent commitFiles ⇒ the dir is an orphan, never visible.
-    * Harvests the dir's parquet-footer min/max/null stats into a
-    * [[DirStats]] sidecar (driver-side metadata read, no extra data
-    * pass) so later CoW probes can skip the dir without scanning. */
-  def stageData(df: DataFrame, table: String): String =
-    stageEntry(df, table, "data", 0).rel
-
-  /** [[stageData]] returning a full [[ManifestEntry]] with the dir's
-    * metrics (record count + column bounds) INLINED — the entry every
-    * commit path should reference so planning and row accounting stay
-    * metadata-only. One footer pass feeds both the sidecar (legacy
-    * readers, GC-co-located) and the manifest line. */
+  /** Write `df` as a new immutable dir (NOT yet referenced by any
+    * manifest) and return its [[ManifestEntry]]. Crash before the
+    * subsequent commit ⇒ the dir is an orphan, never visible. The
+    * dir's parquet-footer metrics (record count, column bounds, file
+    * count and bytes — a driver-side metadata read, no extra data
+    * pass) are INLINED into the entry, the only place they are kept,
+    * so planning and row accounting stay metadata-only. */
   def stageEntry(df: DataFrame, table: String, kind: String, seq: Int,
       key: Seq[String] = Nil): ManifestEntry = {
     val rel = freshDataRel(table)
@@ -745,8 +695,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     // _temporary staging (caught by the 8-appender race spec under
     // load). Append never removes the claim, so the CAS stays a CAS.
     df.write.mode(SaveMode.Append).parquet(s"$root/$rel")
-    val json = DirStats.writeFor(new java.io.File(s"$root/$rel"))
-    ManifestEntry(kind, seq, rel, key, json)
+    ManifestEntry(kind, seq, rel, key, inlineStats(rel))
   }
 
   /** Stage SEVERAL same-schema frames as separate immutable data dirs
@@ -804,11 +753,13 @@ class Snapshots(root: String, segThreshold: Int = 64) {
       }
       rm(new java.io.File(staging))
     }
-    rels.map { rel =>
-      val json = DirStats.writeFor(new java.io.File(s"$root/$rel"))
-      ManifestEntry(kind, seq, rel, Nil, json)
-    }
+    rels.map(rel => ManifestEntry(kind, seq, rel, Nil, inlineStats(rel)))
   }
+
+  /** A staged dir's footer metrics as inline manifest JSON; None when
+    * the harvest failed (the entry then never prunes). */
+  private def inlineStats(rel: String): Option[String] =
+    DirStats.collect(new java.io.File(s"$root/$rel")).map(DirStats.toJson)
 
   /** N sequential append-commits over frames staged in ONE write job
     * ([[stageEntries]]) — the same row sets and manifest semantics as
@@ -816,13 +767,6 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     * stamps, same version count), minus N-1 write jobs' fixed cost. */
   def appendMany(dfs: Seq[DataFrame], table: String): Seq[Int] =
     stageEntries(dfs, table).map(e => appendEntries(table, Seq(e)))
-
-  /** An entry's dir metrics: inline manifest stats first, the per-dir
-    * sidecar as the legacy fallback. None ⇒ unknowable ⇒ no pruning.
-    * Public so maintenance planning (compaction sizing) reads the same
-    * metadata instead of listing each dir. */
-  def entryStats(e: ManifestEntry): Option[DirStats.Stats] =
-    e.stats.orElse(DirStats.read(new java.io.File(s"$root/${e.rel}")))
 
   /** Commit `df` as the next snapshot (full-overwrite semantics: the
     * new version is exactly `df`); returns the new version. For
@@ -1011,7 +955,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
       .getOrElse(sys.error(s"no snapshots for $table")))
 
   /** Planning-time scan pruning — Iceberg's manifest-stats file skip:
-    * data dirs whose footer-stat sidecar PROVES no row can satisfy
+    * data dirs whose inline manifest stats PROVE no row can satisfy
     * `cond` are dropped BEFORE Spark lists or opens them; `cond` still
     * filters the survivors (footer stats are inclusive, not exact —
     * same contract as [[DirStats.mayMatch]] everywhere else). Delete
@@ -1027,7 +971,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     val condExpr =
       org.apache.spark.sql.graft.ColumnBridge.catalystExpression(cond)
     val kept = entries.filter(e => e.kind == "delete" ||
-      entryStats(e).forall(st => DirStats.mayMatch(condExpr, st)))
+      e.stats.forall(st => DirStats.mayMatch(condExpr, st)))
     if (!kept.exists(_.kind == "data"))
       // every dir provably unmatchable: empty frame, correct schema
       asOf(spark, table, v).filter(cond).limit(0)
@@ -1146,7 +1090,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
       val condExpr =
         org.apache.spark.sql.graft.ColumnBridge.catalystExpression(cond)
       val (mayMatch, proven) = datas.partition(e =>
-        entryStats(e).forall(st => DirStats.mayMatch(condExpr, st)))
+        e.stats.forall(st => DirStats.mayMatch(condExpr, st)))
       val (touchedRels, _) =
         splitByMark(spark, mayMatch.map(_.rel), _.filter(cond))
       if (touchedRels.isEmpty) v
@@ -1252,7 +1196,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
               val pe = org.apache.spark.sql.graft.ColumnBridge
                 .catalystExpression(pred)
               datas.filter(e =>
-                entryStats(e).forall(st => DirStats.mayMatch(pe, st)))
+                e.stats.forall(st => DirStats.mayMatch(pe, st)))
             }.getOrElse(datas) // un-literal-able key type: probe them all
             val keys0 = source.select(col(key)).distinct()
             val keys = if (broadcastKeys) broadcast(keys0) else keys0
@@ -1357,7 +1301,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
         // no I/O) keeps its entry without even joining the probe scan
         val (candidates, provenClean) = applicable.partition(e =>
           dels.exists(d => d.seq > e.seq && DirStats.mayContainDeleteKeys(
-            entryStats(e), entryStats(d), d.key)))
+            e.stats, d.stats, d.key)))
         // conservative probe: a candidate dir containing ANY deleted
         // key rewrites (even if only a later-seq delete names that
         // key) — a superset, never a wrong result, because the
@@ -1456,7 +1400,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
       // or disappeared across the step — decided from manifest stats
       val affectedKept = prev.filter(e => e.kind == "data" &&
         nextSet.contains(e) && changedDels.exists(d => d.seq > e.seq &&
-          DirStats.mayContainDeleteKeys(entryStats(e), entryStats(d), d.key)))
+          DirStats.mayContainDeleteKeys(e.stats, d.stats, d.key)))
       // PURE-APPEND FAST PATH: nothing removed and no kept dir's
       // delete-applicability changed ⇒ the prev side scans nothing, so
       // every surviving row of the added dirs is an INSERT by
@@ -1753,19 +1697,20 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     * snapshot whose entries carry record counts is the SUM OF MANIFEST
     * FIELDS, zero data I/O (the shape a 1000-snapshot history audit
     * needs — the pre-r12 m14 paid one table scan per version). Only
-    * dirs whose rows the metadata can't pin — legacy entries with no
-    * stats, or dirs an outstanding equality delete can reach (larger
-    * seq, overlapping key bounds) — fall back to one MoR-applied scan,
-    * so the cost is O(delete-affected files), never O(table). */
+    * dirs whose rows the metadata can't pin — entries with no stats
+    * (footer harvest failed), or dirs an outstanding equality delete
+    * can reach (larger seq, overlapping key bounds) — fall back to one
+    * MoR-applied scan, so the cost is O(delete-affected files), never
+    * O(table). */
   def logicalRowCount(spark: SparkSession, table: String, v: Int): Long = {
     val entries = readEntries(table, v)
     val dels = entries.filter(_.kind == "delete")
     val datas = entries.filter(_.kind == "data")
     val (clean, risky) = datas.partition { e =>
-      entryStats(e).isDefined && !dels.exists(d => d.seq > e.seq &&
-        DirStats.mayContainDeleteKeys(entryStats(e), entryStats(d), d.key))
+      e.stats.isDefined && !dels.exists(d => d.seq > e.seq &&
+        DirStats.mayContainDeleteKeys(e.stats, d.stats, d.key))
     }
-    clean.map(e => entryStats(e).get.rows).sum +
+    clean.map(_.stats.get.rows).sum +
       (if (risky.isEmpty) 0L
        else {
          val n = logicalFrame(spark, risky ++ dels).count()
@@ -1787,8 +1732,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
   /** Iceberg-style `$files` metadata table: one row per manifest entry
     * of snapshot `v` with its inline metrics — the per-file
     * introspection surface that pairs with [[history]]'s `$snapshots`.
-    * Pure metadata: built from the manifest (sidecar fallback for
-    * legacy entries), no data I/O. */
+    * Pure metadata: built from the manifest, no data I/O. */
   def filesMetadata(spark: SparkSession, table: String, v: Int): DataFrame = {
     import spark.implicits._
     val cols = Seq("entry_kind", "seq", "rel_path", "record_count",
@@ -1799,57 +1743,25 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     if (segLines.isEmpty)
       // inline manifest (below segThreshold): the entry list is tiny by
       // construction — a driver-side Seq→toDF is the right shape
-      readEntries(table, v).map(e => Snapshots.fileRow(root, e))
-        .toDF(cols: _*)
+      readEntries(table, v).map(Snapshots.fileRowFrom).toDF(cols: _*)
     else {
       // segmented manifest: the entry list can be table-sized (a
       // multi-million-file table), so the rows come from a DISTRIBUTED
       // text scan over the segment files themselves — the driver
-      // touches only the version file's @seg ref list. The closure
-      // captures only strings and the (small) legacy patch map —
-      // parse + stats helpers are static on the companion, and the
-      // sidecar fallback for statless LEGACY entries resolves on the
-      // DRIVER first (executors may not share its filesystem; without
-      // this, the same snapshot would answer differently by manifest
-      // shape). The patch pre-pass is one extra metadata-text scan,
-      // paid only for correctness of the rare pre-inline-stats case.
+      // touches only the version file's @seg ref list, and building
+      // the frame launches no job. The closure captures nothing but
+      // the static parse + row helpers on the companion.
       val segPaths =
         segLines.map(l => s"$root/${l.stripPrefix("@seg\t")}")
-      val patch = legacyStatsPatch(spark, segPaths)
       val seg = spark.read.textFile(segPaths: _*)
         .map(_.trim).filter(_.nonEmpty)
-        .map { l =>
-          val e = Snapshots.parseEntryLine(l)
-          Snapshots.fileRowFrom(e,
-            e.stats.orElse(patch.get(e.rel).flatMap(DirStats.parseJson)))
-        }
+        .map(l => Snapshots.fileRowFrom(Snapshots.parseEntryLine(l)))
       val withInline =
         if (inlineLines.isEmpty) seg
-        else seg.union(spark.createDataset(
-          inlineLines.map(l =>
-            Snapshots.fileRow(root, Snapshots.parseEntryLine(l)))))
+        else seg.union(spark.createDataset(inlineLines.map(l =>
+          Snapshots.fileRowFrom(Snapshots.parseEntryLine(l)))))
       withInline.toDF(cols: _*)
     }
-  }
-
-  /** Driver-resolved sidecar stats for the LEGACY statless entries of
-    * the given segment files: rel → stats JSON, empty when every entry
-    * carries inline metrics (the post-r11 invariant — the map is only
-    * populated for pre-inline-format tables, so it stays small and
-    * ships to executors in the task closure). */
-  private def legacyStatsPatch(spark: SparkSession,
-      segPaths: Seq[String]): Map[String, String] = {
-    import spark.implicits._
-    val statless = spark.read.textFile(segPaths: _*)
-      .map(_.trim).filter(_.nonEmpty)
-      .map { l =>
-        val e = Snapshots.parseEntryLine(l)
-        (e.rel, e.statsJson.isDefined)
-      }
-      .filter(!_._2).map(_._1).collect()
-    statless.iterator
-      .flatMap(rel => Snapshots.sidecarJson(root, rel).map(rel -> _))
-      .toMap
   }
 
   /** Iceberg-style `$partitions` metadata table: per-partition rollup
@@ -1860,7 +1772,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     * footer stats PROVE it is single-valued on `partCol` (min == max,
     * no nulls) — which is what a partitioned write produces, one dir
     * per partition value per commit; a dir the stats can't attribute
-    * (multi-valued, null-bearing, or statless legacy) rolls up under a
+    * (multi-valued, null-bearing, or statless) rolls up under a
     * NULL partition value so its rows are never silently dropped.
     * Pure metadata: no data I/O; the rollup itself is a Spark groupBy
     * so the shape survives a manifest with millions of entries. */
@@ -1878,7 +1790,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     * the live snapshot carries more than `maxDeleteEntries` delete
     * entries (per-read delete-dir scans) OR its deleted-row mass exceeds
     * `maxDeletePermille` of data rows (per-read shuffle mass);
-    * otherwise OK. Row totals exclude statless legacy entries (the
+    * otherwise OK. Row totals exclude statless entries (the
     * [[partitionsMetadata]] rule: -1 is a sentinel, never a quantity)
     * and surface `has_unknown_stats` so an advisor consumer knows when
     * the permille is a floor, not the truth; an unknowable permille
@@ -1893,7 +1805,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     val entries = readEntries(table, v)
     val (data, del) = entries.partition(_.kind == "data")
     def known(es: Seq[ManifestEntry]): (Long, Boolean) = {
-      val rs = es.map(e => entryStats(e).map(_.rows).getOrElse(-1L))
+      val rs = es.map(_.records)
       (rs.filter(_ >= 0).sum, rs.exists(_ < 0))
     }
     val (dataRows, dataUnknown) = known(data)
@@ -1918,7 +1830,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
 
   /** [[partitionsMetadata]] with an EXACT mode for unattributable dirs.
     * `exact = false` (the metadata-only default) rolls a dir the stats
-    * can't attribute — multi-valued on `partCol`, or statless legacy —
+    * can't attribute — multi-valued on `partCol`, or statless —
     * into the NULL bucket, rows conserved but unattributed. `exact =
     * true` adds a bounded fallback: those dirs (and ONLY those — the
     * m07 pattern) are data-scanned and their rows attributed by VALUE,
@@ -1926,7 +1838,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     * NULL. Cost is O(unattributable dirs) data I/O plus their rel list
     * on the driver — proven single-valued dirs keep the manifest-only
     * path, so a well-partitioned 100 TB table pays nothing and a table
-    * with one legacy mixed dir pays one dir's scan. Scanned
+    * with one mixed dir pays one dir's scan. Scanned
     * contributions count rows and contributing entries exactly;
     * file/byte totals stay manifest-side only (a multi-valued dir's
     * files span partitions — attributing whole files to one value
@@ -1943,7 +1855,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
       .agg(count(lit(1)).as("n_entries"),
         // -1 is the 'stats unknown' sentinel, never a quantity: summing
         // it would silently DEFLATE a bucket that mixes one statless
-        // legacy dir with attributed ones (10 + (-1) = 9) on the exact
+        // dir with attributed ones (10 + (-1) = 9) on the exact
         // surface compaction decisions read. Unknowns are excluded from
         // the totals and surfaced per bucket as has_unknown_stats
         // (all-unknown buckets total NULL, not a fabricated number).
@@ -2013,8 +1925,7 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     * partition value (null when unattributable). Same inline/segmented
     * split as [[filesMetadata]]: a segmented (potentially table-sized)
     * manifest pre-rolls up from a DISTRIBUTED text scan of the segment
-    * files with legacy sidecars driver-resolved; a tiny inline
-    * manifest stays on the driver. */
+    * files; a tiny inline manifest stays on the driver. */
   private def partitionsPreRollup(spark: SparkSession, table: String,
       v: Int, partCol: String): DataFrame = {
     import spark.implicits._
@@ -2024,29 +1935,25 @@ class Snapshots(root: String, segThreshold: Int = 64) {
       .filter(_.nonEmpty).toSeq
     val (segLines, inlineLines) = lines.partition(_.startsWith("@seg\t"))
     if (segLines.isEmpty)
-      readEntries(table, v).map(e => Snapshots.partRow(root, partCol, e))
+      readEntries(table, v).map(Snapshots.partRowFrom(partCol, _))
         .toDF(cols: _*)
     else {
       val partColLocal = partCol
       val segPaths = segLines.map(l => s"$root/${l.stripPrefix("@seg\t")}")
-      val patch = legacyStatsPatch(spark, segPaths)
       val seg = spark.read.textFile(segPaths: _*)
         .map(_.trim).filter(_.nonEmpty)
-        .map { l =>
-          val e = Snapshots.parseEntryLine(l)
-          Snapshots.partRowFrom(partColLocal, e,
-            e.stats.orElse(patch.get(e.rel).flatMap(DirStats.parseJson)))
-        }
+        .map(l => Snapshots.partRowFrom(partColLocal,
+          Snapshots.parseEntryLine(l)))
       (if (inlineLines.isEmpty) seg
        else seg.union(spark.createDataset(inlineLines.map(l =>
-         Snapshots.partRow(root, partCol, Snapshots.parseEntryLine(l))))))
+         Snapshots.partRowFrom(partCol, Snapshots.parseEntryLine(l))))))
         .toDF(cols: _*)
     }
   }
 
   /** Iceberg-style `$manifests`-like metadata table over the segment
     * layer: one row per version-file line of snapshot `v` — a reused
-    * or fresh `@seg` ref (kind "seg") or a legacy inline entry line
+    * or fresh `@seg` ref (kind "seg") or an inline entry line
     * (kind "inline") — with its position and the entry counts it
     * contributes. Pure metadata (version file + cached immutable
     * segments); the view that shows a commit's O(delta) metadata

@@ -7,7 +7,8 @@ import graft.plans.{DirStats, Snapshots}
 /** Micro-decomposition of the snapshot-store commit path — the
   * companion receipt to [[JobProfile]] for the d-family: where do the
   * ~300-400 ms per append/commit actually go (Spark write job, footer
-  * harvest, manifest render/claim, read-back resolution)?
+  * harvest into the manifest line, manifest render/claim, read-back
+  * resolution)?
   * Usage: `SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.CommitMicro"` */
 object CommitMicro {
   def main(args: Array[String]): Unit = {
@@ -48,9 +49,6 @@ object CommitMicro {
       }
       ms("  DirStats.collect (footers)") {
         DirStats.collect(new java.io.File(s"${sn.rootDir}/$rel"))
-      }
-      ms("  DirStats.writeFor (sidecar)") {
-        DirStats.writeFor(new java.io.File(s"${sn.rootDir}/$rel"))
       }
       ms("  full append (2nd dir)") { sn.append(slice, t) }
       ms("  read current (resolve+count)") { sn.current(spark, t).count() }

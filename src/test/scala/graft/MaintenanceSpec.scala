@@ -162,7 +162,7 @@ class MaintenanceSpec extends SparkSpec {
     sn.commit(o.limit(50), "t")
     // simulate a crash AFTER the data write but BEFORE the manifest
     // rename: a staged-but-uncommitted data dir and a manifest .tmp
-    val staged = sn.stageData(o.limit(20), "t")
+    val staged = sn.stageEntry(o.limit(20), "t", "data", 0).rel
     Files.writeString(new java.io.File(
       s"$root/t/manifests/v=2.manifest.tmp").toPath, staged)
     // readers see only the committed version; the wreckage is inert
@@ -216,7 +216,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(sn.current(spark, "t").count() == 600)
   }
 
-  test("DirStats: footer-stat sidecars are exact on rows and the " +
+  test("DirStats: inline manifest stats are exact on rows and the " +
       "inclusive evaluator prunes only provably-unmatchable dirs") {
     import org.apache.spark.sql.graft.ColumnBridge
     import graft.plans.DirStats
@@ -226,10 +226,14 @@ class MaintenanceSpec extends SparkSpec {
     sn.commit(o.filter(col("o_orderkey") <= 1000), "t")
     sn.append(o.filter(col("o_orderkey") > 1000), "t")
     val rels = sn.readManifest("t", 2)
-    val stats = rels.map(r =>
-      r -> DirStats.read(new java.io.File(s"$root/$r")).get)
+    val stats = sn.readEntries("t", 2).map(e => e.rel -> e.stats.get)
+    assert(stats.map(_._1) == rels)
     assert(stats.map(_._2.rows).sum == o.count(),
-      "sidecar row counts must sum to the table")
+      "inline row counts must sum to the table")
+    // the manifest's stats are exactly what the dir's footers say
+    stats.foreach { case (rel, st) =>
+      assert(DirStats.collect(new java.io.File(s"$root/$rel")).contains(st))
+    }
     // pruning law: whenever the evaluator says a dir CANNOT match, a
     // real scan finds zero matching rows — over comparison, equality,
     // IN-adjacent, string, null, and conjunction shapes
@@ -261,7 +265,7 @@ class MaintenanceSpec extends SparkSpec {
 
   test("DirStats typed comparisons: timestamps prune in their own unit, " +
       "cross-unit and decimal-vs-double predicates never mis-prune, and " +
-      "unversioned sidecars are rejected") {
+      "unversioned or footprint-less stats are rejected") {
     import org.apache.spark.sql.graft.ColumnBridge
     import graft.plans.DirStats
     val root = scratch()
@@ -275,7 +279,9 @@ class MaintenanceSpec extends SparkSpec {
     sn.append(o.filter(col("o_orderdate") < lit(split)), "ty")
     sn.append(o.filter(col("o_orderdate") >= lit(split)), "ty")
     val Seq(early, late) = sn.readManifest("ty", 2)
-    val earlySt = DirStats.read(new java.io.File(s"$root/$early")).get
+    val earlyJson = sn.readEntries("ty", 2).find(_.rel == early).get
+      .statsJson.get
+    val earlySt = DirStats.parseJson(earlyJson).get
     def may(p: org.apache.spark.sql.Column,
         st: graft.plans.DirStats.Stats): Boolean =
       DirStats.mayMatch(ColumnBridge.catalystExpression(p), st)
@@ -295,19 +301,64 @@ class MaintenanceSpec extends SparkSpec {
     o.limit(50).select(col("o_orderkey"),
         (col("o_totalprice") * 0 + 30.0).cast("decimal(12,2)").as("price"))
       .write.mode("overwrite").parquet(decDir.getPath)
-    DirStats.writeFor(decDir)
-    val decSt = DirStats.read(decDir).get
+    val decSt = DirStats.collect(decDir).get
     assert(may(col("price") < 40.5, decSt),
       "30.00 < 40.5 — the dir matches and must not prune")
     assert(!may(col("price") > 40.5, decSt),
       "every value is 30.00 — a > 40.5 predicate must prune")
-    // an unversioned (stale-format) sidecar must be rejected so stale
-    // units degrade to the conservative no-prune path
-    val sidecar = new java.io.File(s"$root/$early", DirStats.FileName)
-    val body = java.nio.file.Files.readString(sidecar.toPath)
-    java.nio.file.Files.writeString(sidecar.toPath,
-      body.replaceFirst("\\{\"v\":\\d+,", "{"))
-    assert(DirStats.read(new java.io.File(s"$root/$early")).isEmpty)
+    // unversioned (stale-format) stats must be rejected so stale units
+    // degrade to the conservative no-prune path — and so must a body
+    // without the dir's physical footprint
+    def strip(keys: String*) = keys.foldLeft(earlyJson)((j, k) =>
+      j.replaceFirst(s""""$k":\\d+,""", ""))
+    assert(strip("v") != earlyJson && DirStats.parseJson(strip("v")).isEmpty)
+    Seq(Seq("files"), Seq("bytes"), Seq("files", "bytes")).foreach { ks =>
+      assert(strip(ks: _*) != earlyJson)
+      assert(DirStats.parseJson(strip(ks: _*)).isEmpty, s"stripped $ks")
+    }
+  }
+
+  test("one metadata dialect: every write path commits inline stats " +
+      "with a known footprint, and no dir holds a stats sidecar") {
+    val root = scratch()
+    val sn = new Snapshots(root)
+    val o = T.load(spark, sfDir, "orders").filter(col("o_orderkey") <= 4000)
+      .select("o_orderkey", "o_orderstatus", "o_totalprice")
+    val t = "one"
+    def slice(m: Int) = o.filter(col("o_orderkey") % 8 === m)
+    // each write path must land a new version whose every entry carries
+    // parseable inline stats with files/bytes >= 0
+    def check(path: String)(write: => Unit): Unit = {
+      val before = sn.currentVersion(t)
+      write
+      val v = sn.currentVersion(t)
+      assert(v.exists(x => before.forall(_ < x)), s"$path committed nothing")
+      sn.readEntries(t, v.get).foreach { e =>
+        assert(e.stats.exists(st => st.files >= 0 && st.bytes >= 0),
+          s"$path committed an entry without inline footprint stats: $e")
+      }
+    }
+    check("commit")(sn.commit(slice(0), t))
+    check("append")(sn.append(slice(1), t))
+    check("appendMany")(sn.appendMany(Seq(slice(2), slice(3)), t))
+    check("updateWhere")(sn.updateWhere(spark, t, col("o_orderkey") % 8 === 0,
+      Map("o_orderstatus" -> lit("U"))))
+    check("deleteWhere")(sn.deleteWhere(spark, t, col("o_orderkey") === 1L))
+    check("mergeUpsert")(sn.mergeUpsert(spark, t,
+      slice(4).withColumn("o_totalprice", lit(1.0)), "o_orderkey"))
+    check("mergeWith")(sn.mergeWith(spark, t, slice(5), "o_orderkey")(
+      _.dropDuplicates("o_orderkey")))
+    check("deleteWhereMoR")(sn.deleteWhereMoR(spark, t,
+      col("o_orderkey") % 8 === 2, Seq("o_orderkey")))
+    check("rewriteDeletes")(sn.rewriteDeletes(spark, t))
+    check("compactTable")(Maintenance.compactTable(spark, sn, t, 128))
+    val expected = o.filter(col("o_orderkey") % 8 <= 5 &&
+      col("o_orderkey") % 8 =!= 2 && col("o_orderkey") =!= 1L).count()
+    assert(sn.current(spark, t).count() == expected)
+    // nothing else holds a copy of the stats
+    val sidecars = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      .filter(_.getFileName.toString == "_graft_stats.json").count()
+    assert(sidecars == 0, s"$sidecars stats sidecar files under the root")
   }
 
   test("M4: orphan cleanup removes files outside live snapshots only") {
@@ -653,27 +704,27 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("manifest entries round-trip: mixed kinds, seqs, multi-column " +
-      "delete keys, and legacy bare lines all read back exactly") {
+      "delete keys, and statless entries all read back exactly") {
     val root = scratch()
     val sn = new Snapshots(root)
     val o = T.load(spark, sfDir, "orders").limit(10)
     // stage three dirs so the entries have real targets
-    val d1 = sn.stageData(o, "rt")
-    val d2 = sn.stageData(o.select("o_orderkey", "o_orderstatus"), "rt")
-    val d3 = sn.stageData(o.select("o_orderkey"), "rt")
+    val d1 = sn.stageEntry(o, "rt", "data", 0).rel
+    val d2 = sn.stageEntry(o.select("o_orderkey", "o_orderstatus"), "rt",
+      "data", 0).rel
+    val d3 = sn.stageEntry(o.select("o_orderkey"), "rt", "data", 0).rel
     val entries = Seq(
-      graft.plans.ManifestEntry("data", 0, d1, Nil),   // legacy bare form
+      graft.plans.ManifestEntry("data", 0, d1, Nil),   // statless
       graft.plans.ManifestEntry("data", 7, d2, Nil),
       graft.plans.ManifestEntry("delete", 9, d3,
         Seq("o_orderkey", "o_orderstatus")))
     val v = sn.commitEntries("rt", entries)
     assert(sn.readEntries("rt", v) == entries,
       "commit/read must round-trip every entry field exactly")
-    // the legacy line really is the bare path (format compatibility)
+    // a statless seq-0 data entry keeps its kind and seq fields
     val raw = java.nio.file.Files.readString(java.nio.file.Paths.get(
       s"$root/rt/manifests/v=$v.manifest"))
-    assert(raw.linesIterator.next() == d1,
-      "a seq-0 data entry must serialize as the pre-MoR bare path")
+    assert(raw.linesIterator.next() == s"data\t0\t$d1")
   }
 
   test("appendsBetween: emits exactly the appended rows, skips rewrite " +
@@ -887,15 +938,15 @@ class MaintenanceSpec extends SparkSpec {
     val o = T.load(spark, sfDir, "orders")
     sn.commit(o.limit(10), "occ")
     val stale = sn.currentVersion("occ") // Some(1)
-    val rel = sn.readManifest("occ", 1)
+    val es = sn.readEntries("occ", 1)
     sn.commit(o.limit(20), "occ") // concurrent writer lands v2
     val e = intercept[graft.plans.ConcurrentCommitException] {
-      sn.commitFilesIfCurrent("occ", stale, rel)
+      sn.commitEntriesIfCurrent("occ", stale, es)
     }
     assert(e.expected == Some(1) && e.found == Some(2))
     // prev-INDEPENDENT commits (rollback/branch/publish intent) are
-    // allowed to proceed past the race: commitFiles re-claims
-    assert(sn.commitFiles("occ", rel) == 3)
+    // allowed to proceed past the race: commitEntries re-claims
+    assert(sn.commitEntries("occ", es) == 3)
     assert(sn.current(spark, "occ").count() == 10)
   }
 
@@ -1321,6 +1372,11 @@ class MaintenanceSpec extends SparkSpec {
     val o2 = o.withColumn("oq", quarter(col("o_orderdate")).cast("long"))
     val t3 = "ptseg"
     (1 to 4).foreach(q => sn.append(o2.filter(col("oq") === q), t3))
+    // building either segmented frame is metadata-only: no Spark job
+    assert(jobsDuring {
+      sn.filesMetadata(spark, t, 4)
+      sn.partitionsMetadata(spark, t3, 4, "oq")
+    } == 0, "constructing segmented $files/$partitions must launch no job")
     val pm = sn.partitionsMetadata(spark, t3, 4, "oq")
     assert(pm.queryExecution.executedPlan.toString.contains("FileScan text"),
       "segmented \\$partitions must pre-roll up from a distributed scan")
@@ -1373,8 +1429,8 @@ class MaintenanceSpec extends SparkSpec {
     sn.commit(Seq((1L, 1L, "a"), (2L, 1L, "b")).toDF("k", "p", "s"), t)
     // multi-valued WITH stats → NULL bucket, 2 known rows
     sn.append(Seq((3L, 2L, "c"), (4L, 3L, "d")).toDF("k", "p", "s"), t)
-    // legacy statless dir: parquet written directly (no sidecar, no
-    // inline stats), committed as a bare entry — rows UNKNOWN (-1)
+    // statless dir: parquet written directly (no inline stats),
+    // committed as a statless entry — rows UNKNOWN (-1)
     Seq((5L, 9L, "e")).toDF("k", "p", "s")
       .write.parquet(s"$root/$t/data/d99")
     sn.occRetry(t) { cur =>
