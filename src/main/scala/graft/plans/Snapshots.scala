@@ -1114,8 +1114,9 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     * the batch twin of the streaming upsert sink's discipline, under
     * the same optimistic commit. The rewrite collapses every dir
     * holding a source key into one, so merge COLOCATES keys; an empty
-    * source returns the current version (no churn). Write cost
-    * O(affected files + source), never O(table). */
+    * source commits nothing and returns the current version (0 when
+    * the table has no snapshots yet). Write cost O(affected files +
+    * source), never O(table). */
   def mergeUpsert(spark: SparkSession, table: String, source: DataFrame,
       key: String): Int =
     keyedCow(spark, table, source, key, broadcastKeys = false) {
@@ -1132,16 +1133,31 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     }
 
   /** Shared keyed copy-on-write engine under [[mergeUpsert]], [[mergeWith]],
-    * and through them the streaming upsert sink. Per optimistic attempt:
+    * and through them the streaming upsert sink. `source` is persisted
+    * for the call and its FIRST pass is one aggregate — row count, key
+    * [min, max] and null presence in one job — which materializes the
+    * cache at the source's own partitioning; every later pass reads
+    * the cache. (A micro-batch frame re-runs its stateful plan, state
+    * commit included, on every action over it; here it runs once.)
+    * An empty source commits nothing: it returns the current version,
+    * or 0 for a table with no snapshots. Per optimistic attempt:
     *  - BOOTSTRAP: a table with no snapshots commits `build(None, source)`
     *    as v1 — VALIDATED, so a racing first writer forces a retry
     *    instead of being silently overwritten;
-    *  - METADATA PRUNE: one tiny agg takes the source's key [min, max] +
-    *    null presence; footer stats drop dirs whose key range provably
-    *    misses it (an IsNull arm keeps null-key dirs in play whenever
+    *  - METADATA PRUNE: the aggregate's key bounds + null presence
+    *    against footer stats drop dirs whose key range provably misses
+    *    the source (an IsNull arm keeps null-key dirs in play whenever
     *    the source carries a null key — otherwise stats on non-null
     *    values would prune a dir whose null rows the null-safe probe
     *    must see);
+    *  - SIZING: when the surviving candidates' inline `bytes` plus the
+    *    source's cached size fit one read split
+    *    (`spark.sql.files.maxPartitionBytes`), the probe and the rewrite
+    *    run on ONE partition: no exchange, one written file. A
+    *    micro-batch of a few rows otherwise shuffles into
+    *    `spark.sql.shuffle.partitions` and writes that many files
+    *    (a streaming query's session runs without AQE). Larger merges
+    *    keep the partitioned plan;
     *  - PROBE: survivors pay one NULL-SAFE semi-join scan (a plain
     *    equi-join would never mark a dir holding null-key rows, making
     *    the dedup outcome depend on physical colocation);
@@ -1153,41 +1169,44 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     *    instead of carrying inert delete entries forever. */
   private def keyedCow(spark: SparkSession, table: String,
       source: DataFrame, key: String, broadcastKeys: Boolean)
-      (build: (Option[DataFrame], DataFrame) => DataFrame): Int =
-    occRetry(table) { cur =>
-      import org.apache.spark.sql.functions._
-      // the attempt reads `source` up to four times (emptiness, key
-      // bounds, distinct keys, the build) — persist it for the
-      // attempt's scope so a caller passing a derived frame pays its
-      // lineage once, not 4× (the deleteWhereMoR discipline). Persist
-      // is per-attempt: a lost race unpersists before the retry re-runs.
-      // Ownership-guarded: a caller that ALREADY cached `source` keeps
-      // its cache — unpersisting a frame we didn't persist would
-      // silently evict the caller's data (and re-persisting an
-      // already-persisted Dataset logs Spark warnings per OCC retry).
-      val ownPersist =
-        source.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-      if (ownPersist)
-        source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try cur match {
-        case None =>
-          require(!source.isEmpty,
-            s"no snapshots for $table and nothing to bootstrap from")
-          commitEntriesIfCurrent(table, None,
-            Seq(stageEntry(build(None, source), table, "data", 1)))
-        case Some(v) =>
-          if (source.isEmpty) v // no churn from an empty source
-          else {
+      (build: (Option[DataFrame], DataFrame) => DataFrame): Int = {
+    import org.apache.spark.sql.functions._
+    // Ownership-guarded persist: a caller that ALREADY cached `source`
+    // keeps its cache — unpersisting a frame we didn't persist would
+    // silently evict the caller's data. The cache spans every OCC
+    // attempt: the source does not change when another writer wins.
+    val ownPersist =
+      source.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    if (ownPersist)
+      source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val b = source.agg(count(lit(1)), min(col(key)), max(col(key)),
+        sum(when(col(key).isNull, 1L).otherwise(0L))).collect()(0)
+      if (b.getLong(0) == 0) return currentVersion(table).getOrElse(0)
+      val hasNullKey = b.getLong(3) > 0
+      // the cache is loaded now, so its stats are the in-memory size
+      val sourceBytes = source.select(col("*")).queryExecution
+        .optimizedPlan.stats.sizeInBytes
+      val splitBytes = spark.sessionState.conf.filesMaxPartitionBytes
+      occRetry(table) { cur =>
+        // one partition end to end, or the partitioned plan
+        def sized(candidates: Seq[ManifestEntry]): DataFrame => DataFrame =
+          if (candidates.forall(_.stats.isDefined) && sourceBytes +
+              candidates.map(_.stats.get.bytes).sum <= splitBytes)
+            _.coalesce(1)
+          else identity
+        cur match {
+          case None =>
+            val fit = sized(Nil)
+            commitEntriesIfCurrent(table, None,
+              Seq(stageEntry(fit(build(None, fit(source))), table, "data", 1)))
+          case Some(v) =>
             val entries = readEntries(table, v)
             val dels = entries.filter(_.kind == "delete")
             val datas = entries.filter(_.kind == "data")
-            val b = source.agg(min(col(key)).as("mn"), max(col(key)).as("mx"),
-              sum(when(col(key).isNull, 1L).otherwise(0L)).as("nn"))
-              .collect()(0)
-            val hasNullKey = b.getLong(2) > 0
             val mayTouch = scala.util.Try {
-              val range = if (b.isNullAt(0)) None
-                else Some(col(key) >= lit(b.get(0)) && col(key) <= lit(b.get(1)))
+              val range = if (b.isNullAt(1)) None
+                else Some(col(key) >= lit(b.get(1)) && col(key) <= lit(b.get(2)))
               val pred = (range, hasNullKey) match {
                 case (Some(r), true) => r || col(key).isNull
                 case (Some(r), false) => r
@@ -1198,15 +1217,17 @@ class Snapshots(root: String, segThreshold: Int = 64) {
               datas.filter(e =>
                 e.stats.forall(st => DirStats.mayMatch(pe, st)))
             }.getOrElse(datas) // un-literal-able key type: probe them all
-            val keys0 = source.select(col(key)).distinct()
+            val fit = sized(mayTouch)
+            val src = fit(source)
+            val keys0 = src.select(col(key)).distinct()
             val keys = if (broadcastKeys) broadcast(keys0) else keys0
             val (touchedRels, _) = splitByMark(spark, mayTouch.map(_.rel),
-              df => df.join(keys, df(key) <=> keys(key), "left_semi"))
+              df => fit(df).join(keys, df(key) <=> keys(key), "left_semi"))
             val touched = mayTouch.filter(e => touchedRels.contains(e.rel))
             val kept = datas.filterNot(e => touchedRels.contains(e.rel))
             val touchedFrame =
               if (touched.isEmpty) None
-              else Some(logicalFrame(spark, touched ++ dels))
+              else Some(fit(logicalFrame(spark, touched ++ dels)))
             // a delete stays live iff SOME kept data entry under-ranks
             // it — equivalent to comparing against the minimum kept
             // seq (O(E+D), not the O(E×D) exists-per-delete scan)
@@ -1219,11 +1240,12 @@ class Snapshots(root: String, segThreshold: Int = 64) {
               if (e.kind == "data") !touchedRels.contains(e.rel)
               else liveDels(e))
             commitEntriesIfCurrent(table, cur, carried :+
-              stageEntry(build(touchedFrame, source), table, "data",
+              stageEntry(fit(build(touchedFrame, src)), table, "data",
                 nextSeq(entries)))
-          }
-      } finally if (ownPersist) source.unpersist(blocking = false)
-    }
+        }
+      }
+    } finally if (ownPersist) source.unpersist(blocking = false)
+  }
 
   /** CoW merge at file granularity with a caller-supplied combiner —
     * the engine under the streaming upsert sink: data dirs holding a
@@ -1231,8 +1253,12 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     * source)`, with the rewrite applying outstanding equality deletes
     * before combining (so a sink batch never resurrects MoR-deleted
     * rows). A table with no snapshots yet bootstraps to v1 from
-    * `combine(source)` under the same validated commit. `broadcastKeys`
-    * lets micro-batch callers broadcast the membership probe. All the
+    * `combine(source)` under the same validated commit; an empty
+    * source commits nothing. `source` runs once: [[keyedCow]] caches
+    * it, and its first pass is the one aggregate that also decides
+    * emptiness. A merge whose input fits one read split combines on
+    * one partition — no exchange, one file. `broadcastKeys` lets
+    * micro-batch callers broadcast the membership probe. All the
     * probe/commit discipline lives in [[keyedCow]]. */
   def mergeWith(spark: SparkSession, table: String, source: DataFrame,
       key: String, broadcastKeys: Boolean = false)
@@ -1737,9 +1763,9 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     import spark.implicits._
     val cols = Seq("entry_kind", "seq", "rel_path", "record_count",
       "n_stat_columns", "file_count", "total_bytes")
-    val lines = readRaw(table, v).linesIterator.map(_.trim)
-      .filter(_.nonEmpty).toSeq
-    val (segLines, inlineLines) = lines.partition(_.startsWith("@seg\t"))
+    // a version file is either all inline entry lines or all @seg refs
+    val segLines = readRaw(table, v).linesIterator.map(_.trim)
+      .filter(_.startsWith("@seg\t")).toSeq
     if (segLines.isEmpty)
       // inline manifest (below segThreshold): the entry list is tiny by
       // construction — a driver-side Seq→toDF is the right shape
@@ -1753,14 +1779,10 @@ class Snapshots(root: String, segThreshold: Int = 64) {
       // the static parse + row helpers on the companion.
       val segPaths =
         segLines.map(l => s"$root/${l.stripPrefix("@seg\t")}")
-      val seg = spark.read.textFile(segPaths: _*)
+      spark.read.textFile(segPaths: _*)
         .map(_.trim).filter(_.nonEmpty)
         .map(l => Snapshots.fileRowFrom(Snapshots.parseEntryLine(l)))
-      val withInline =
-        if (inlineLines.isEmpty) seg
-        else seg.union(spark.createDataset(inlineLines.map(l =>
-          Snapshots.fileRowFrom(Snapshots.parseEntryLine(l)))))
-      withInline.toDF(cols: _*)
+        .toDF(cols: _*)
     }
   }
 
@@ -1931,22 +1953,18 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     import spark.implicits._
     val cols = Seq("is_data", "rel", "partition_value", "rows", "files",
       "bytes")
-    val lines = readRaw(table, v).linesIterator.map(_.trim)
-      .filter(_.nonEmpty).toSeq
-    val (segLines, inlineLines) = lines.partition(_.startsWith("@seg\t"))
+    val segLines = readRaw(table, v).linesIterator.map(_.trim)
+      .filter(_.startsWith("@seg\t")).toSeq
     if (segLines.isEmpty)
       readEntries(table, v).map(Snapshots.partRowFrom(partCol, _))
         .toDF(cols: _*)
     else {
       val partColLocal = partCol
       val segPaths = segLines.map(l => s"$root/${l.stripPrefix("@seg\t")}")
-      val seg = spark.read.textFile(segPaths: _*)
+      spark.read.textFile(segPaths: _*)
         .map(_.trim).filter(_.nonEmpty)
         .map(l => Snapshots.partRowFrom(partColLocal,
           Snapshots.parseEntryLine(l)))
-      (if (inlineLines.isEmpty) seg
-       else seg.union(spark.createDataset(inlineLines.map(l =>
-         Snapshots.partRowFrom(partCol, Snapshots.parseEntryLine(l))))))
         .toDF(cols: _*)
     }
   }

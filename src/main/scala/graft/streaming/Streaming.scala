@@ -428,13 +428,19 @@ object Streaming extends QueryPack {
     * carry a sequence/LSN per key-change precisely for this, and the
     * table keeps the seq column so it can referee). Equal seqs must be
     * exact redeliveries (identical rows — then the pick is immaterial
-    * and replay is idempotent). One shuffle on the key per batch,
-    * committed as a NEW copy-on-write version where ONLY the data
-    * dirs holding a batch key are re-read and re-written (untouched
-    * dirs carry over as manifest entries) — per-batch write cost is
-    * O(affected files), never O(table). An empty batch (restart
-    * replay, stateful no-data trigger) commits nothing — a version
-    * for zero effect would be pure churn. */
+    * and replay is idempotent). The batch runs ONCE: foreachBatch
+    * hands over a frame that re-executes the micro-batch's plan —
+    * a stateful one's state-store commit included — on every action,
+    * so the merge caches it and its first pass is the one aggregate
+    * that yields emptiness and key bounds together. Committed as a NEW
+    * copy-on-write version where ONLY the data dirs holding a batch
+    * key are re-read and re-written (untouched dirs carry over as
+    * manifest entries) — per-batch write cost is O(affected files),
+    * never O(table); a merge that fits one read split dedups on one
+    * partition and writes one file, with no shuffle. An empty batch
+    * (restart replay, stateful no-data trigger, an empty bootstrap)
+    * commits nothing — a version for zero effect would be pure
+    * churn. */
   def applyUpsertBatch(sn: graft.plans.Snapshots, table: String,
       key: String, seqCol: String)(batch: DataFrame): Unit = {
     import org.apache.spark.sql.expressions.Window
@@ -450,24 +456,22 @@ object Streaming extends QueryPack {
             .orderBy(col(seqCol).desc, struct(others.toIndexedSeq: _*).desc)))
         .filter(col("_rn") === 1).drop("_rn")
     }
-    if (!batch.isEmpty) {
-      // Copy-on-write MERGE at file granularity via the store's shared
-      // merge engine: only the data dirs that contain a batch key are
-      // re-read (with any outstanding equality deletes applied) and
-      // re-written; every other entry — delete entries included —
-      // carries over, under the optimistic commit. The first batch
-      // bootstraps the table through the SAME validated path, so a
-      // racing first writer forces a retry instead of being
-      // overwritten. The batch's key set is micro-batch-sized, so the
-      // membership probe broadcasts it. Sound because merge COLOCATES
-      // a key: every merge rewrites ALL dirs holding a batch key into
-      // one dir, so a key untouched by this batch was fully deduped
-      // wherever it last landed. (Mixing raw `append` writes into an
-      // upsert-managed table would break that invariant — use this
-      // sink or appends, not both.)
-      sn.mergeWith(batch.sparkSession, table, batch, key,
-        broadcastKeys = true)(dedup)
-    }
+    // Copy-on-write MERGE at file granularity via the store's shared
+    // merge engine: only the data dirs that contain a batch key are
+    // re-read (with any outstanding equality deletes applied) and
+    // re-written; every other entry — delete entries included —
+    // carries over, under the optimistic commit. The first batch
+    // bootstraps the table through the SAME validated path, so a
+    // racing first writer forces a retry instead of being
+    // overwritten. The batch's key set is micro-batch-sized, so the
+    // membership probe broadcasts it. Sound because merge COLOCATES
+    // a key: every merge rewrites ALL dirs holding a batch key into
+    // one dir, so a key untouched by this batch was fully deduped
+    // wherever it last landed. (Mixing raw `append` writes into an
+    // upsert-managed table would break that invariant — use this
+    // sink or appends, not both.)
+    sn.mergeWith(batch.sparkSession, table, batch, key,
+      broadcastKeys = true)(dedup)
   }
 
   /** Streaming MERGE sink — the lakehouse continuous-ingestion write

@@ -608,6 +608,101 @@ class MaintenanceSpec extends SparkSpec {
       Set("b2", "x3"), "the folded delete must still have applied")
   }
 
+  test("keyed CoW sizes its passes: a merge within one read split writes " +
+      "one file through a rewrite with no shuffle; above the split the " +
+      "shuffle stays; both give the same rows") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val latest = (df: org.apache.spark.sql.DataFrame) => df
+      .withColumn("_rn", row_number().over(
+        Window.partitionBy("k").orderBy(col("seq").desc)))
+      .filter(col("_rn") === 1).drop("_rn")
+    val base = (0L until 2000L).map(k => (k, s"v$k", 1L))
+    // three stored keys in each of the two dirs, plus two new keys
+    val changes = Seq(3L, 500L, 999L, 1000L, 1500L, 1999L, 5000L, 5001L)
+      .map(k => (k, s"w$k", 2L)).toDF("k", "v", "seq")
+    // (rows after the merge, parquet files it wrote, shuffles in its
+    // rewrite plan, bytes of the dirs it could touch)
+    def run(upsert: Boolean, maxPartitionBytes: String)
+        : (Set[(Long, String, Long)], Int, Int, Long) = {
+      val root = scratch()
+      val sn = new Snapshots(root)
+      sn.append(base.take(1000).toDF("k", "v", "seq").coalesce(1), "t")
+      sn.append(base.drop(1000).toDF("k", "v", "seq").coalesce(1), "t")
+      val inputBytes = sn.readEntries("t", 2).map(_.stats.get.bytes).sum
+      // the streaming sink's session runs without AQE
+      val plans = withConfs("spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.files.maxPartitionBytes" -> maxPartitionBytes) {
+        writePlansDuring {
+          if (upsert) sn.mergeUpsert(spark, "t", changes, "k")
+          else sn.mergeWith(spark, "t", changes, "k",
+            broadcastKeys = true)(latest)
+        }
+      }
+      assert(plans.size == 1, s"one rewrite write expected, got $plans")
+      val rel = sn.readEntries("t", 3).last.rel
+      val files = new java.io.File(s"$root/$rel").listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      val rows = sn.current(spark, "t").as[(Long, String, Long)]
+        .collect().toSet
+      (rows, files, plans.map(shuffles).sum, inputBytes)
+    }
+    val want = (base.map { case (k, v, s) => k -> (k, v, s) }.toMap ++
+      changes.as[(Long, String, Long)].collect().map(r => r._1 -> r))
+      .values.toSet
+    for (upsert <- Seq(false, true)) {
+      val what = if (upsert) "mergeUpsert" else "mergeWith"
+      val (small, smallFiles, smallShuffles, bytes) =
+        run(upsert, (128L << 20).toString)
+      assert(smallFiles == 1 && smallShuffles == 0,
+        s"$what within one split: $smallFiles files, $smallShuffles shuffles")
+      // a split below the merge's input: today's partitioned plan
+      val split = bytes / 4
+      val (large, _, largeShuffles, _) = run(upsert, split.toString)
+      assert(largeShuffles > 0,
+        s"$what above one split ($bytes > $split bytes) lost its shuffle")
+      assert(small == want && large == want, s"$what merged rows differ")
+    }
+  }
+
+  /** Runs `body` with the session confs set, restoring them after. */
+  private def withConfs[T](kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Physical plans of the parquet writes started on this thread while
+    * `body` runs, from the SQL execution-start events of its job group
+    * ([[inJobGroup]]). */
+  private def writePlansDuring(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.SparkPlanInfo] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]()
+    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] =
+      p +: p.children.flatMap(nodes)
+    inJobGroup(group => new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.jobGroupId.contains(group) && nodes(s.sparkPlanInfo)
+              .exists(_.nodeName.contains("InsertIntoHadoopFsRelation")) =>
+          plans.add(s.sparkPlanInfo)
+        case _ =>
+      }
+    })(body)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
+  }
+
+  /** Shuffle exchanges in a physical plan (broadcasts not counted). */
+  private def shuffles(p: org.apache.spark.sql.execution.SparkPlanInfo): Int =
+    (if (p.nodeName == "Exchange") 1 else 0) + p.children.map(shuffles).sum
+
   test("MoR delete: the delete dir holds only keys (O(delta) write), " +
       "re-inserts outrank it by seq, time travel still works, and the " +
       "fold drops delete entries while carrying unaffected dirs verbatim") {
@@ -2016,25 +2111,41 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   /** Spark jobs started on this thread while `body` runs, counted by a
-    * SparkListener. Events reach listeners asynchronously, so a
-    * sentinel job of its own group runs after `body`: once the
-    * listener has seen it start, it has seen every earlier job. */
+    * SparkListener on its job group ([[inJobGroup]]). */
   private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val seen = new java.util.concurrent.atomic.AtomicInteger()
+    inJobGroup(group => new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (jobGroup(e).contains(group)) seen.incrementAndGet()
+    })(body)
+    seen.get
+  }
+
+  private def jobGroup(e: org.apache.spark.scheduler.SparkListenerJobStart)
+      : Option[String] =
+    Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+
+  /** Runs `body` in a fresh job group with `listen(group)` registered.
+    * Events reach listeners asynchronously, so a sentinel job of its
+    * own group runs after `body`: one listener queue hands each event
+    * to all its listeners in post order, so once the drain listener
+    * has seen the sentinel start, `listen(group)` has seen every
+    * earlier event. */
+  private def inJobGroup(listen: String => org.apache.spark.scheduler.SparkListener)
+      (body: => Unit): Unit = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val group = s"graft-jobs-${System.nanoTime()}"
     val sentinel = s"$group-sentinel"
-    val seen = new java.util.concurrent.atomic.AtomicInteger()
     val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
+    val listener = listen(group)
+    val drain = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => seen.incrementAndGet()
-          case Some(`sentinel`) => drained.countDown()
-          case _ =>
-        }
+        if (jobGroup(e).contains(sentinel)) drained.countDown()
     }
     sc.addSparkListener(listener)
+    sc.addSparkListener(drain)
     try {
       sc.setJobGroup(group, "jobs under test")
       try body finally sc.clearJobGroup()
@@ -2042,8 +2153,10 @@ class MaintenanceSpec extends SparkSpec {
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "the listener never saw the sentinel job")
-      seen.get
-    } finally sc.removeSparkListener(listener)
+    } finally {
+      sc.removeSparkListener(drain)
+      sc.removeSparkListener(listener)
+    }
   }
 
   /** A merge-on-read table mixing two delete key sets, null keys and

@@ -419,6 +419,66 @@ class StreamingSpec extends SparkSpec {
       s"MoR-deleted key must stay deleted through a sink rewrite: $state")
   }
 
+  test("upsert sink runs each micro-batch's plan once: a counting " +
+      "projection above the windowed aggregate sees every output row once") {
+    // foreachBatch hands the sink a frame over the micro-batch's planned
+    // RDD, so every action on it re-runs the stateful aggregate and
+    // commits its state store again; the counter sits above the
+    // aggregate and counts each execution of the batch's rows
+    implicit val sqlCtx = spark.sqlContext
+    def ts(t: String) = java.sql.Timestamp.valueOf(s"2026-01-01 $t")
+    val sn = new graft.plans.Snapshots(graft.core.Scratch.dir("upsert_once"))
+    // an empty bootstrap batch commits nothing and throws nothing
+    Streaming.applyUpsertBatch(sn, "w", "window_key", "trip_count")(
+      Seq.empty[(String, Long)].toDF("window_key", "trip_count"))
+    assert(sn.versions("w").isEmpty, "an empty bootstrap must not commit")
+
+    val seen = spark.sparkContext.longAccumulator("upsert_once_rows")
+    val counted = udf { (k: String) => seen.add(1L); k }.asNondeterministic()
+    val mem = MemoryStream[(java.sql.Timestamp, String, Double)]
+    val stats = Streaming.windowedStats(
+        mem.toDF().toDF("ts", "event_type", "value"),
+        "ts", "value", "event_type")
+      .withColumn("window_key", counted(concat_ws("|",
+        col("window_start").cast("string"), col("event_type"))))
+    val q = Streaming.upsertSink(stats, sn, "w", "window_key", "trip_count")
+      .outputMode("update")
+      .option("checkpointLocation", graft.core.Scratch.dir("upsert_once_ck"))
+      .start()
+    // rows the counter saw while the batch(es) for `rows` ran
+    def executedRows(rows: Seq[(java.sql.Timestamp, String, Double)]): Long = {
+      val before = seen.value
+      mem.addData(rows)
+      q.processAllAvailable()
+      seen.value - before
+    }
+    try {
+      // bootstrap batch: three (window, type) groups are emitted
+      assert(executedRows(Seq((ts("10:00:05"), "view", 1.0),
+        (ts("10:00:10"), "view", 2.0), (ts("10:00:20"), "buy", 3.0),
+        (ts("10:01:05"), "view", 4.0))) == 3L)
+      assert(sn.versions("w") == Seq(1))
+      // two groups updated, one of them already stored
+      assert(executedRows(Seq((ts("10:01:30"), "view", 5.0),
+        (ts("10:02:00"), "buy", 6.0))) == 2L)
+      assert(sn.versions("w") == Seq(1, 2))
+      // every row behind the watermark: the batch emits nothing
+      assert(executedRows(Seq((ts("09:00:00"), "view", 7.0))) == 0L)
+      assert(sn.versions("w") == Seq(1, 2), "an empty batch must not commit")
+    } finally q.stop()
+    val state = sn.current(spark, "w").collect()
+      .map(r => r.getAs[String]("window_key") -> r.getAs[Long]("trip_count"))
+      .toMap
+    assert(state == Map("2026-01-01 10:00:00|view" -> 2L,
+      "2026-01-01 10:00:00|buy" -> 1L, "2026-01-01 10:01:00|view" -> 2L,
+      "2026-01-01 10:02:00|buy" -> 1L), s"upserted windows wrong: $state")
+    // a few rows fit one read split: each commit wrote one file
+    val files = sn.readEntries("w", 2).map(e =>
+      new java.io.File(s"${sn.rootDir}/${e.rel}").listFiles()
+        .count(_.getName.endsWith(".parquet")))
+    assert(files.nonEmpty && files.forall(_ == 1), s"files per dir: $files")
+  }
+
   test("T5/T7: IN-FLIGHT windowed-aggregation state survives kill/" +
       "resume — rows from both incarnations merge into one window") {
     // The upsert kill/resume case below proves offset/effect recovery
