@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.FilePartition
 
 /** A snapshot commit validated against an expected current version lost
   * its race: another writer committed first. Carries what the writer
@@ -1151,13 +1152,16 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     *    values would prune a dir whose null rows the null-safe probe
     *    must see);
     *  - SIZING: when the surviving candidates' inline `bytes` plus the
-    *    source's cached size fit one read split
-    *    (`spark.sql.files.maxPartitionBytes`), the probe and the rewrite
-    *    run on ONE partition: no exchange, one written file. A
+    *    source's cached size fit the split Spark's file scan would size
+    *    for that many bytes (`FilePartition.maxSplitBytes`:
+    *    min(maxPartitionBytes, max(openCostInBytes, bytes / parallelism))
+    *    — 4 MB by default on a multi-core session), the probe and the
+    *    rewrite run on ONE partition: no exchange, one written file. A
     *    micro-batch of a few rows otherwise shuffles into
     *    `spark.sql.shuffle.partitions` and writes that many files
-    *    (a streaming query's session runs without AQE). Larger merges
-    *    keep the partitioned plan;
+    *    (a streaming query's session runs without AQE). Any merge that
+    *    Spark would itself spread over several splits keeps the
+    *    partitioned plan;
     *  - PROBE: survivors pay one NULL-SAFE semi-join scan (a plain
     *    equi-join would never mark a dir holding null-key rows, making
     *    the dedup outcome depend on physical colocation);
@@ -1187,14 +1191,17 @@ class Snapshots(root: String, segThreshold: Int = 64) {
       // the cache is loaded now, so its stats are the in-memory size
       val sourceBytes = source.select(col("*")).queryExecution
         .optimizedPlan.stats.sizeInBytes
-      val splitBytes = spark.sessionState.conf.filesMaxPartitionBytes
       occRetry(table) { cur =>
-        // one partition end to end, or the partitioned plan
-        def sized(candidates: Seq[ManifestEntry]): DataFrame => DataFrame =
-          if (candidates.forall(_.stats.isDefined) && sourceBytes +
-              candidates.map(_.stats.get.bytes).sum <= splitBytes)
+        // one partition end to end when Spark's file scan would read
+        // that many bytes as one split, else the partitioned plan
+        def sized(candidates: Seq[ManifestEntry]): DataFrame => DataFrame = {
+          val total = (sourceBytes + candidates.flatMap(_.stats)
+            .map(s => BigInt(s.bytes)).sum).min(Long.MaxValue).toLong
+          if (candidates.forall(_.stats.isDefined) &&
+              total <= FilePartition.maxSplitBytes(spark, total))
             _.coalesce(1)
           else identity
+        }
         cur match {
           case None =>
             val fit = sized(Nil)
@@ -1256,8 +1263,9 @@ class Snapshots(root: String, segThreshold: Int = 64) {
     * `combine(source)` under the same validated commit; an empty
     * source commits nothing. `source` runs once: [[keyedCow]] caches
     * it, and its first pass is the one aggregate that also decides
-    * emptiness. A merge whose input fits one read split combines on
-    * one partition — no exchange, one file. `broadcastKeys` lets
+    * emptiness. A merge whose input Spark's file scan would read as
+    * one split (`FilePartition.maxSplitBytes`) combines on one
+    * partition — no exchange, one file. `broadcastKeys` lets
     * micro-batch callers broadcast the membership probe. All the
     * probe/commit discipline lives in [[keyedCow]]. */
   def mergeWith(spark: SparkSession, table: String, source: DataFrame,

@@ -436,8 +436,9 @@ object Streaming extends QueryPack {
     * copy-on-write version where ONLY the data dirs holding a batch
     * key are re-read and re-written (untouched dirs carry over as
     * manifest entries) — per-batch write cost is O(affected files),
-    * never O(table); a merge that fits one read split dedups on one
-    * partition and writes one file, with no shuffle. An empty batch
+    * never O(table); a merge whose input Spark's file scan would read
+    * as one split dedups on one partition and writes one file, with
+    * no shuffle. An empty batch
     * (restart replay, stateful no-data trigger, an empty bootstrap)
     * commits nothing — a version for zero effect would be pure
     * churn. */

@@ -608,9 +608,9 @@ class MaintenanceSpec extends SparkSpec {
       Set("b2", "x3"), "the folded delete must still have applied")
   }
 
-  test("keyed CoW sizes its passes: a merge within one read split writes " +
-      "one file through a rewrite with no shuffle; above the split the " +
-      "shuffle stays; both give the same rows") {
+  test("keyed CoW sizes its passes: a merge Spark would read as one split " +
+      "writes one file through a rewrite with no shuffle; one it would " +
+      "spread over several splits keeps the shuffle; all give the same rows") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val latest = (df: org.apache.spark.sql.DataFrame) => df
@@ -622,17 +622,18 @@ class MaintenanceSpec extends SparkSpec {
     val changes = Seq(3L, 500L, 999L, 1000L, 1500L, 1999L, 5000L, 5001L)
       .map(k => (k, s"w$k", 2L)).toDF("k", "v", "seq")
     // (rows after the merge, parquet files it wrote, shuffles in its
-    // rewrite plan, bytes of the dirs it could touch)
-    def run(upsert: Boolean, maxPartitionBytes: String)
-        : (Set[(Long, String, Long)], Int, Int, Long) = {
+    // rewrite plan), under session confs derived from the bytes of the
+    // dirs it could touch
+    def run(upsert: Boolean, confs: Long => Seq[(String, String)])
+        : (Set[(Long, String, Long)], Int, Int) = {
       val root = scratch()
       val sn = new Snapshots(root)
       sn.append(base.take(1000).toDF("k", "v", "seq").coalesce(1), "t")
       sn.append(base.drop(1000).toDF("k", "v", "seq").coalesce(1), "t")
       val inputBytes = sn.readEntries("t", 2).map(_.stats.get.bytes).sum
       // the streaming sink's session runs without AQE
-      val plans = withConfs("spark.sql.adaptive.enabled" -> "false",
-          "spark.sql.files.maxPartitionBytes" -> maxPartitionBytes) {
+      val plans = withConfs(("spark.sql.adaptive.enabled" -> "false") +:
+          confs(inputBytes): _*) {
         writePlansDuring {
           if (upsert) sn.mergeUpsert(spark, "t", changes, "k")
           else sn.mergeWith(spark, "t", changes, "k",
@@ -645,23 +646,30 @@ class MaintenanceSpec extends SparkSpec {
         .count(_.getName.endsWith(".parquet"))
       val rows = sn.current(spark, "t").as[(Long, String, Long)]
         .collect().toSet
-      (rows, files, plans.map(shuffles).sum, inputBytes)
+      (rows, files, plans.map(shuffles).sum)
     }
     val want = (base.map { case (k, v, s) => k -> (k, v, s) }.toMap ++
       changes.as[(Long, String, Long)].collect().map(r => r._1 -> r))
       .values.toSet
     for (upsert <- Seq(false, true)) {
       val what = if (upsert) "mergeUpsert" else "mergeWith"
-      val (small, smallFiles, smallShuffles, bytes) =
-        run(upsert, (128L << 20).toString)
+      val (small, smallFiles, smallShuffles) = run(upsert, _ => Nil)
       assert(smallFiles == 1 && smallShuffles == 0,
         s"$what within one split: $smallFiles files, $smallShuffles shuffles")
-      // a split below the merge's input: today's partitioned plan
-      val split = bytes / 4
-      val (large, _, largeShuffles, _) = run(upsert, split.toString)
-      assert(largeShuffles > 0,
-        s"$what above one split ($bytes > $split bytes) lost its shuffle")
-      assert(small == want && large == want, s"$what merged rows differ")
+      // a split cap below the merge's input: the partitioned plan
+      val (capped, _, cappedShuffles) = run(upsert, bytes =>
+        Seq("spark.sql.files.maxPartitionBytes" -> (bytes / 4).toString))
+      assert(cappedShuffles > 0,
+        s"$what above maxPartitionBytes lost its shuffle")
+      // under the cap but above the open cost: Spark sizes the split at
+      // bytes / parallelism (4 cores here) and spreads the read, so the
+      // merge keeps its partitions too
+      val (spread, _, spreadShuffles) = run(upsert, bytes =>
+        Seq("spark.sql.files.openCostInBytes" -> (bytes / 4).toString))
+      assert(spreadShuffles > 0,
+        s"$what above the open cost lost its shuffle")
+      assert(Seq(small, capped, spread).forall(_ == want),
+        s"$what merged rows differ")
     }
   }
 
