@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.internal.StaticSQLConf
 import org.apache.spark.sql.types.IntegerType
 import graft.functions.{GeohashExpr, MinhashBandsExpr, PortableStrHashExpr, PqEncodeExpr, SimhashPackExpr, SpanHashesExpr, TokenHashesExpr, VectorSumAgg, ZOrderInterleave}
 
@@ -18,6 +20,16 @@ import graft.functions.{GeohashExpr, MinhashBandsExpr, PortableStrHashExpr, PqEn
   * Catalyst sees the registered function like any built-in: it
   * constant-folds literal calls, participates in whole-stage codegen,
   * and needs no UDF boxing.
+  *
+  * Both paths also fix the size of Spark's JVM-wide codegen cache
+  * ([[GraftExtensions.sizeCodegenCache]]), so a query that runs again
+  * reuses its compiled classes instead of compiling them again. The
+  * size is a static SQL conf (`spark.sql.codegen.cache.maxEntries`):
+  * `spark.conf.set` rejects it, and `CodeGenerator`'s static
+  * initializer reads it once, from the conf of whichever thread
+  * compiles first. So it has to be in place before the JVM's first
+  * compile; setting it afterwards changes what the conf reports, never
+  * the cache.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -30,7 +42,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.spanHashesDescriptor)
     ext.injectFunction(GraftExtensions.strHashDescriptor)
     ext.injectFunction(GraftExtensions.tokenHashesDescriptor)
-    ext.injectOptimizerRule(_ => graft.plans.IdempotentStringOps)
+    // the rule builder runs when a session first optimizes a plan,
+    // before that plan's code is generated
+    ext.injectOptimizerRule { session =>
+      GraftExtensions.sizeCodegenCache(session)
+      graft.plans.IdempotentStringOps
+    }
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinBinning)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
@@ -151,7 +168,43 @@ object GraftExtensions {
       TokenHashesExpr(children.head)
     })
 
+  /** Entries of Spark's codegen cache (Spark's default: 100). Distinct
+    * generated classes, measured with the cache unbounded on a 4-core
+    * host: 240 over a whole `analytics` benchmark run (setup, warm-up
+    * and two timed rounds of its 16-query mix; at 100 entries each
+    * round compiled ~210 classes, missing on every lookup); 144 over a
+    * `stream_tail` run (~3 new per round); 2,523 over one `graft.Bench`
+    * pass at sf0.01, at most 60 new in any one query's first run. So
+    * 1000 holds either benchmark run four times over and any query's
+    * repeat; a whole Bench pass still cycles through it. */
+  val CodegenCacheEntries = 1000
+
+  /** Fixes the size of Spark's JVM-wide codegen cache at
+    * [[CodegenCacheEntries]], or at the value `spark`'s conf already
+    * carries when a user set one. `CodeGenerator` is forced to
+    * initialize here, on this thread, with the size in a throwaway
+    * session's conf, so the size holds whichever thread would have
+    * compiled first, and no session's conf claims a size that is not
+    * in effect. Once `CodeGenerator` has initialized, this is a no-op.
+    * Only the bytecode compiled for identical generated source is
+    * reused: every query still plans and executes. */
+  private[graft] def sizeCodegenCache(spark: SparkSession): Unit = {
+    val key = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+    val conf = spark.sessionState.conf
+    val probe = spark.newSession()
+    probe.sessionState.conf.setConfString(key,
+      if (conf.contains(key)) conf.getConfString(key)
+      else CodegenCacheEntries.toString)
+    val caller = SparkSession.getActiveSession
+    SparkSession.setActiveSession(probe)
+    // the first touch of CodeGenerator runs its static initializer
+    try CodeGenerator.compileTime
+    finally caller.fold(SparkSession.clearActiveSession())(
+      SparkSession.setActiveSession)
+  }
+
   def register(spark: SparkSession): Unit = {
+    sizeCodegenCache(spark)
     // optimizer rules can't be injected into a built session through
     // SparkSessionExtensions; extraOptimizations is the sanctioned
     // post-hoc hook (idempotent: guard against double-registration)

@@ -557,8 +557,8 @@ object AuditOps extends QueryPack {
       .agg(count(lit(1)).as("n_games"),
         sum(when(col("winner") === col("s1"), 1L).otherwise(0L))
           .as("wins1")))
-    // no barrier: wt's only action is the collect below, so pinning
-    // its blocks would store data nothing re-reads
+    // no barrier: on the pulled path wt's only action is its collect,
+    // so pinning its blocks would store data nothing re-reads
     val wt =
       pr.select(col("s1").as("src"), col("wins1").as("w"),
           col("n_games").as("n"))
@@ -567,6 +567,15 @@ object AuditOps extends QueryPack {
           col("n_games").as("n")))
         .groupBy(col("src"))
         .agg(sum(col("w")).as("w_total"), sum(col("n")).as("n_games"))
+    // the pull below is bounded by the win matrix's measured rows (wt
+    // holds at most twice as many); above the broadcast row cap the
+    // iteration stays distributed
+    if (pr.count() <= Barriers.broadcastRowCap(pr)) btPulled(pr, wt)
+    else btIterated(pr, wt)
+  }
+
+  /** The MM iteration on the driver, over the pulled win matrix. */
+  private def btPulled(pr: DataFrame, wt: DataFrame): DataFrame = {
     // |sources| is the model dimension — every MM-iteration frame is
     // that size, and the win matrix pr is at most its square.
     // MODEL PULL (the l32 centroid / l85 pool discipline): the MM
@@ -602,11 +611,36 @@ object AuditOps extends QueryPack {
         src -> (wTotal * 1000000000L) / math.max(dsc(src), 1L)
       }.toMap
     }
-    val spark = docsDf.sparkSession
+    val spark = pr.sparkSession
     import spark.implicits._
     wtRows.toSeq
       .map { case (src, wTotal, nGames) => (src, nGames, wTotal, st(src)) }
       .toDF("source", "n_games", "w_total", "strength_micro")
+      .orderBy(desc("strength_micro"), col("source"))
+  }
+
+  /** The MM iteration as DataFrame joins, the spelling [[btIterCte]]
+    * gives the oracle: the same integer-lattice floor divisions, for a
+    * win matrix too large to pull. Each round's strengths are
+    * materialized, so the next round's plan does not re-inline them. */
+  private def btIterated(pr: DataFrame, wt: DataFrame): DataFrame = {
+    val r0 = wt.select(col("src"), lit(1000000L).as("st"))
+    val r = (1 to btIters).foldLeft(r0) { (r, _) =>
+      val t = pr
+        .join(r.select(col("src").as("s1"), col("st").as("st1")), "s1")
+        .join(r.select(col("src").as("s2"), col("st").as("st2")), "s2")
+        .select(col("s1"), col("s2"),
+          expr("(n_games * 1000000000) div greatest(st1 + st2, 1)")
+            .as("term"))
+      val d = t.select(col("s1").as("src"), col("term"))
+        .unionAll(t.select(col("s2").as("src"), col("term")))
+        .groupBy(col("src")).agg(sum(col("term")).as("dsc"))
+      Barriers.materialize(wt.join(d, "src").select(col("src"),
+        expr("(w_total * 1000000000) div greatest(dsc, 1)").as("st")))
+    }
+    wt.join(r, "src")
+      .select(col("src").as("source"), col("n_games"), col("w_total"),
+        col("st").as("strength_micro"))
       .orderBy(desc("strength_micro"), col("source"))
   }
 

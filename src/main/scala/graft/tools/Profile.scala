@@ -1,6 +1,8 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime
 
 /** Timing probe for individual registered queries — the companion to
   * [[Explain]] for the per-operator performance review:
@@ -10,10 +12,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Runs each named query `reps` times under a session shaped like
   * Bench's (`local[SPARK_GRAFT_CPUS]`, default 4) and prints every
-  * run's wall seconds, so a regression can be attributed to a query
-  * (and its variance seen) without paying for the full 277-query
-  * sweep. Construction + execution are both inside the timer,
-  * matching Bench's charge. */
+  * run's wall seconds, with the codegen compiles it paid for and
+  * their compile time, so a regression can be attributed to a query
+  * (and its variance or codegen-cache misses seen) without paying for
+  * the full 277-query sweep. Construction + execution are both inside
+  * the timer, matching Bench's charge. */
 object Profile {
   def main(args: Array[String]): Unit = {
     val reps = args.headOption.flatMap(_.toIntOption).getOrElse(3)
@@ -27,12 +30,15 @@ object Profile {
     graft.core.GraftExtensions.register(spark)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     names.foreach { q =>
-      val times = (1 to reps).map { _ =>
+      val runs = (1 to reps).map { _ =>
+        val (c0, ns0) = (METRIC_COMPILATION_TIME.getCount, compileTime)
         val t0 = System.nanoTime()
         graft.SparkEntry.queries(q)(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
+        f"${(System.nanoTime() - t0) / 1e9}%.2f " +
+          f"(${METRIC_COMPILATION_TIME.getCount - c0} compiles, " +
+          f"${(compileTime - ns0) / 1e9}%.2f s)"
       }
-      println(f"$q%-35s ${times.map(t => f"$t%.2f").mkString(" ")}")
+      println(f"$q%-35s ${runs.mkString(" ")}")
     }
     spark.stop()
   }
