@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-import org.apache.spark.sql.internal.StaticSQLConf
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 import org.apache.spark.sql.types.IntegerType
 import graft.functions.{GeohashExpr, MinhashBandsExpr, PortableStrHashExpr, PqEncodeExpr, SimhashPackExpr, SpanHashesExpr, TokenHashesExpr, VectorSumAgg, ZOrderInterleave}
 
@@ -179,28 +179,30 @@ object GraftExtensions {
     * repeat; a whole Bench pass still cycles through it. */
   val CodegenCacheEntries = 1000
 
-  /** Fixes the size of Spark's JVM-wide codegen cache at
-    * [[CodegenCacheEntries]], or at the value `spark`'s conf already
-    * carries when a user set one. `CodeGenerator` is forced to
-    * initialize here, on this thread, with the size in a throwaway
-    * session's conf, so the size holds whichever thread would have
-    * compiled first, and no session's conf claims a size that is not
-    * in effect. Once `CodeGenerator` has initialized, this is a no-op.
-    * Only the bytecode compiled for identical generated source is
-    * reused: every query still plans and executes. */
-  private[graft] def sizeCodegenCache(spark: SparkSession): Unit = {
+  /** The codegen cache size for a session with conf `conf`: the value
+    * it already carries when a user set one, else
+    * [[CodegenCacheEntries]]. */
+  private[graft] def cacheSize(conf: SQLConf): String = {
     val key = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
-    val conf = spark.sessionState.conf
-    val probe = spark.newSession()
-    probe.sessionState.conf.setConfString(key,
-      if (conf.contains(key)) conf.getConfString(key)
-      else CodegenCacheEntries.toString)
-    val caller = SparkSession.getActiveSession
-    SparkSession.setActiveSession(probe)
+    if (conf.contains(key)) conf.getConfString(key)
+    else CodegenCacheEntries.toString
+  }
+
+  /** Fixes the size of Spark's JVM-wide codegen cache at
+    * [[cacheSize]] of `spark`'s conf. `CodeGenerator` is forced to
+    * initialize here, on this thread, while `SQLConf.get` returns a bare
+    * conf that carries the size, so the size holds whichever thread
+    * would have compiled first, and no session's conf claims a size
+    * that is not in effect. Once `CodeGenerator` has initialized, a call
+    * changes nothing and costs one empty conf object. Only the bytecode
+    * compiled for identical generated source is reused: every query
+    * still plans and executes. */
+  private[graft] def sizeCodegenCache(spark: SparkSession): Unit = {
+    val sized = new SQLConf
+    sized.setConfString(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+      cacheSize(spark.sessionState.conf))
     // the first touch of CodeGenerator runs its static initializer
-    try CodeGenerator.compileTime
-    finally caller.fold(SparkSession.clearActiveSession())(
-      SparkSession.setActiveSession)
+    SQLConf.withExistingConf(sized)(CodeGenerator.compileTime)
   }
 
   def register(spark: SparkSession): Unit = {

@@ -557,8 +557,8 @@ object AuditOps extends QueryPack {
       .agg(count(lit(1)).as("n_games"),
         sum(when(col("winner") === col("s1"), 1L).otherwise(0L))
           .as("wins1")))
-    // no barrier: on the pulled path wt's only action is its collect,
-    // so pinning its blocks would store data nothing re-reads
+    // no barrier: wt's only action is the collect below, so pinning
+    // its blocks would store data nothing re-reads
     val wt =
       pr.select(col("s1").as("src"), col("wins1").as("w"),
           col("n_games").as("n"))
@@ -567,15 +567,6 @@ object AuditOps extends QueryPack {
           col("n_games").as("n")))
         .groupBy(col("src"))
         .agg(sum(col("w")).as("w_total"), sum(col("n")).as("n_games"))
-    // the pull below is bounded by the win matrix's measured rows (wt
-    // holds at most twice as many); above the broadcast row cap the
-    // iteration stays distributed
-    if (pr.count() <= Barriers.broadcastRowCap(pr)) btPulled(pr, wt)
-    else btIterated(pr, wt)
-  }
-
-  /** The MM iteration on the driver, over the pulled win matrix. */
-  private def btPulled(pr: DataFrame, wt: DataFrame): DataFrame = {
     // |sources| is the model dimension — every MM-iteration frame is
     // that size, and the win matrix pr is at most its square.
     // MODEL PULL (the l32 centroid / l85 pool discipline): the MM
@@ -593,6 +584,11 @@ object AuditOps extends QueryPack {
     // as the DataFrame/oracle spelling ((x*1e9) div max(d,1) on
     // non-negative longs), so the result is bit-identical — oracle
     // re-proven at sf0.01 and sf0.1 after the change.
+    // BOUND, whatever the corpus size: the panel holds ≤ btPanel docs
+    // (doc_id < btPanel on unique ids, the ASSUMES above), so there
+    // are ≤ btPanel sources, pr holds ≤ btPanel·(btPanel−1)/2 = 7,140
+    // rows (one per unordered source pair) and wt ≤ btPanel rows —
+    // three orders below Barriers.broadcastRowCap's 4M default.
     val prRows = pr.select(col("s1"), col("s2"), col("n_games")).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val wtRows = wt.collect()
@@ -611,36 +607,11 @@ object AuditOps extends QueryPack {
         src -> (wTotal * 1000000000L) / math.max(dsc(src), 1L)
       }.toMap
     }
-    val spark = pr.sparkSession
+    val spark = docsDf.sparkSession
     import spark.implicits._
     wtRows.toSeq
       .map { case (src, wTotal, nGames) => (src, nGames, wTotal, st(src)) }
       .toDF("source", "n_games", "w_total", "strength_micro")
-      .orderBy(desc("strength_micro"), col("source"))
-  }
-
-  /** The MM iteration as DataFrame joins, the spelling [[btIterCte]]
-    * gives the oracle: the same integer-lattice floor divisions, for a
-    * win matrix too large to pull. Each round's strengths are
-    * materialized, so the next round's plan does not re-inline them. */
-  private def btIterated(pr: DataFrame, wt: DataFrame): DataFrame = {
-    val r0 = wt.select(col("src"), lit(1000000L).as("st"))
-    val r = (1 to btIters).foldLeft(r0) { (r, _) =>
-      val t = pr
-        .join(r.select(col("src").as("s1"), col("st").as("st1")), "s1")
-        .join(r.select(col("src").as("s2"), col("st").as("st2")), "s2")
-        .select(col("s1"), col("s2"),
-          expr("(n_games * 1000000000) div greatest(st1 + st2, 1)")
-            .as("term"))
-      val d = t.select(col("s1").as("src"), col("term"))
-        .unionAll(t.select(col("s2").as("src"), col("term")))
-        .groupBy(col("src")).agg(sum(col("term")).as("dsc"))
-      Barriers.materialize(wt.join(d, "src").select(col("src"),
-        expr("(w_total * 1000000000) div greatest(dsc, 1)").as("st")))
-    }
-    wt.join(r, "src")
-      .select(col("src").as("source"), col("n_games"), col("w_total"),
-        col("st").as("strength_micro"))
       .orderBy(desc("strength_micro"), col("source"))
   }
 

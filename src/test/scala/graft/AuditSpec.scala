@@ -95,29 +95,6 @@ class AuditSpec extends SparkSpec {
     assert(r.map(_.getAs[Long]("strength_micro")).distinct.length === 1)
   }
 
-  test("l96: above the broadcast row cap the distributed MM iteration " +
-      "gives the pulled fit's rows") {
-    // 5 sources over 30 docs with mixed scores: a 10-row win matrix
-    val d = (0L until 30L)
-      .map(i => (i, s"s${i % 5}", btText(((i * 7) % 5).toInt)))
-      .toDF("doc_id", "source", "text")
-    def joins(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.optimizedPlan.collect {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-      }.size
-    val pulled = AuditOps.btStrengths(d)
-    val key = "spark.graft.broadcast.maxRows"
-    spark.conf.set(key, "9")
-    val iterated = try AuditOps.btStrengths(d) finally spark.conf.unset(key)
-    // the pulled fit is a local relation; the fallback joins
-    assert(joins(pulled) === 0)
-    assert(joins(iterated) > 0)
-    val rows = pulled.collect().toSeq
-    assert(rows.size === 5)
-    assert(rows.map(_.getAs[Long]("strength_micro")).distinct.size > 1)
-    assert(iterated.collect().toSeq === rows)
-  }
-
   test("l76: a below-k cell is flagged with its row mass; a k-strong cell is not") {
     // risky: 2 distinct users, 3 rows in (click, 10, band 0)
     // safe: 5 distinct users in (view, 11, band 0)

@@ -31,20 +31,24 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(rows1(7) === (0 until 10).map(i => Row(i + 7L, i * 8L)))
   }
 
-  test("register leaves a user's codegen cache size and the active " +
-      "session alone") {
+  test("the cache size is a user's setting when there is one, else " +
+      "CodegenCacheEntries") {
     val key = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
     val user = spark.newSession()
     user.sessionState.conf.setConfString(key, "321")
     assert(GraftExtensions.CodegenCacheEntries != 321)
+    assert(GraftExtensions.cacheSize(user.sessionState.conf) === "321")
+    val plain = spark.newSession()
+    assert(GraftExtensions.cacheSize(plain.sessionState.conf) ===
+      GraftExtensions.CodegenCacheEntries.toString)
+  }
+
+  test("register writes no session's conf and keeps the active session") {
+    val key = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
     val active = SparkSession.getActiveSession
-    GraftExtensions.register(user)
-    assert(user.conf.get(key) === "321")
-    assert(SparkSession.getActiveSession === active)
-    // the throwaway session that carried the size never became the
-    // caller's: a session with no user setting still reports none
     val plain = spark.newSession()
     GraftExtensions.register(plain)
     assert(!plain.sessionState.conf.contains(key))
+    assert(SparkSession.getActiveSession === active)
   }
 }
